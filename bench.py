@@ -127,18 +127,18 @@ def main() -> None:
     t_cold = time.time()
     run_crawl(
         spark, pages, corpus.seeds, scorer, 1, cfg,
-        collect_metrics=False, pages_prepared=True, lm_counts=lm_counts,
+        pages_prepared=True, lm_counts=lm_counts,
     )
     warmup_sec = time.time() - t_cold
 
     t0 = time.time()
     run = run_crawl(
         spark, pages, corpus.seeds, scorer, n_rounds, cfg,
-        collect_metrics=False, pages_prepared=True, lm_counts=lm_counts,
+        pages_prepared=True, lm_counts=lm_counts,
     )
     crawl_sec = time.time() - t0
-    expanded = sum(m.get("urls_discovered", m.get("urls_new", 0)) for m in run.metrics)
-    scored = sum(m.get("fetched", 0) for m in run.metrics)
+    expanded = sum(m["urls_new"] for m in run.metrics)
+    scored = sum(m["fetched"] for m in run.metrics)
     urls_per_sec = (expanded + scored) / crawl_sec if crawl_sec > 0 else 0.0
     times["crawl_rounds"] = round(crawl_sec, 3)
 
@@ -180,6 +180,7 @@ def main() -> None:
             "pages": n_pages,
             "seeds": n_seeds,
             "rounds": len(run.metrics),
+            "round_metrics": run.metrics,
             "urls_expanded": expanded,
             "pages_scored": scored,
             "crawl_sec": round(crawl_sec, 2),

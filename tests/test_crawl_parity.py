@@ -6,8 +6,12 @@ under the same seed list and politeness budget'."""
 
 from __future__ import annotations
 
-import pytest
+from dataclasses import replace
 
+import pytest
+from pyspark.sql import functions as F
+
+from topicrawler_spark.crawl.checkpoint import CheckpointStore
 from topicrawler_spark.crawl.config import CrawlConfig
 from topicrawler_spark.crawl.driver import run_crawl
 from topicrawler_spark.crawl.simulator import CrawlSimulator
@@ -223,3 +227,141 @@ def test_seen_segment_compaction_matches_full_checkpoint(spark, corpus, scorer, 
     )
     # no duplicate rows may accumulate across segment unions
     assert seg.state.seen.count() == seg.state.seen.select("url_hash").distinct().count()
+
+
+# Per-round metrics of crawls of this corpus as reported by the engine's
+# earlier metrics path, which counted each figure with its own Spark action.
+# The observed metrics must reproduce them.
+_BROADCAST_METRICS = [
+    dict(round=1, admitted=3, fetched=3, scored=3, perp_min=91.35743044327607,
+         perp_max=36405.2629058253, perp_avg=24170.794426721182, n_rejected_pages=0,
+         urls_new=9, n_directive_1=3, n_directive_3=6),
+    dict(round=2, admitted=6, fetched=5, scored=5, perp_min=138.9491056711309,
+         perp_max=69800.96118582178, perp_avg=22548.628672009654, n_rejected_pages=0,
+         urls_new=19, n_directive_1=6, n_directive_2=5, n_directive_3=8),
+    dict(round=3, admitted=10, fetched=8, scored=8, perp_min=147.9226914490065,
+         perp_max=41357.082422377156, perp_avg=9308.999166640886, n_rejected_pages=0,
+         urls_new=15, n_directive_1=10, n_directive_2=3, n_directive_3=2),
+]
+_JOIN_REFRESH_METRICS = [
+    dict(round=1, admitted=3, fetched=3, scored=3, perp_min=91.35743044327621,
+         perp_max=36405.26290582493, perp_avg=24170.794426720928, n_rejected_pages=0,
+         urls_new=9, n_directive_1=3, n_directive_3=6),
+    dict(round=2, admitted=6, fetched=5, scored=5, perp_min=138.9491056711309,
+         perp_max=69800.96118582122, perp_avg=22548.628672009403, n_rejected_pages=0,
+         urls_new=19, n_directive_1=6, n_directive_2=5, n_directive_3=8),
+    dict(round=3, admitted=10, fetched=8, scored=8, perp_min=31.498653516326563,
+         perp_max=73.80489697817805, perp_avg=46.4283737887307, n_rejected_pages=0,
+         urls_new=15, n_directive_1=15),
+]
+_PREREQ_METRICS = [
+    dict(round=1, admitted=3, fetched=1, scored=0, perp_min=None, perp_max=None,
+         perp_avg=None, n_rejected_pages=0, urls_new=0),
+    dict(round=2, admitted=3, fetched=3, scored=3, perp_min=91.35743044327607,
+         perp_max=36405.2629058253, perp_avg=24170.794426721182, n_rejected_pages=0,
+         urls_new=9, n_directive_1=3, n_directive_3=6),
+    dict(round=3, admitted=5, fetched=3, scored=3, perp_min=138.9491056711309,
+         perp_max=69800.96118582178, perp_avg=23796.843782930766, n_rejected_pages=0,
+         urls_new=13, n_directive_1=6, n_directive_2=5, n_directive_3=2),
+]
+PINNED_METRICS = {
+    "broadcast": _BROADCAST_METRICS,
+    # the same crawl in a store, stopped after round 1 and resumed
+    "resumed": _BROADCAST_METRICS,
+    "bloom": [
+        dict(m, bloom_fresh=fresh, bloom_suspect=suspect)
+        for m, (fresh, suspect) in zip(_BROADCAST_METRICS, [(9, 0), (19, 0), (15, 10)])
+    ],
+    "join_refresh": _JOIN_REFRESH_METRICS,
+    "prereq": _PREREQ_METRICS,
+}
+
+
+def _assert_metrics_equal(got: dict, want: dict) -> None:
+    extra = {k: v for k, v in got.items() if k not in want}
+    # directive counters are reported for every directive, zeros included
+    assert all(k.startswith("n_directive_") and v == 0 for k, v in extra.items()), extra
+    for k, v in want.items():
+        if k == "perp_avg" and v is not None:
+            assert got[k] == pytest.approx(v, rel=1e-9), k
+        else:
+            assert got[k] == v, k
+
+
+def _assert_manifests_match_tables(spark, run, ckpt: str) -> None:
+    """Each committed round's manifest metrics equal the run's metrics and
+    the counts over that round's committed tables."""
+    store = CheckpointStore(ckpt)
+
+    def fetched_total(r):
+        return store.read(spark, r, "host_fetched").agg(F.sum("fetched")).collect()[0][0] or 0
+
+    for m in run.metrics:
+        r = m["round"]
+        assert store.metrics(r) == m
+        seen = store.read(spark, r, "seen_delta")
+        prereqs = seen.filter(F.col("canon").endswith("/robots.txt")).count()
+        assert m["admitted"] == store.read(spark, r, "fetch_log").count()
+        assert m["scored"] == store.read(spark, r, "results").count()
+        assert m["urls_new"] == seen.count() - prereqs
+        assert m["fetched"] == fetched_total(r) - fetched_total(r - 1)
+
+
+@pytest.mark.parametrize("crawl", sorted(PINNED_METRICS))
+def test_round_metrics_match_pinned(spark, corpus, scorer, cfg, tmp_path, crawl):
+    pages = pages_dataframe(spark, corpus)
+    ckpt = str(tmp_path / "ck") if crawl in ("resumed", "prereq") else None
+    kw = {}
+    if crawl == "bloom":
+        cfg = replace(cfg, bloom_min_seen=0)
+    elif crawl == "join_refresh":
+        cfg = replace(cfg, score_mode="join", lm_refresh_every=2)
+        kw["lm_counts"] = spark.createDataFrame(
+            [(g, len(g.split(" ")), c) for g, c in scorer.lm.counts.items()],
+            "ngram string, n int, cnt long",
+        )
+    elif crawl == "prereq":
+        cfg = replace(cfg, schedule_robots_prereqs=True)
+    runs = []
+    if crawl == "resumed":
+        runs.append(run_crawl(spark, pages, corpus.seeds, scorer, 1, cfg, checkpoint_dir=ckpt))
+    runs.append(run_crawl(spark, pages, corpus.seeds, scorer, 3, cfg, checkpoint_dir=ckpt, **kw))
+    got = [m for run in runs for m in run.metrics]
+    want = PINNED_METRICS[crawl]
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        _assert_metrics_equal(g, w)
+    if ckpt is not None:
+        for run in runs:
+            _assert_manifests_match_tables(spark, run, ckpt)
+
+
+def test_round_admitting_nothing_under_aqe_reports_zeros(
+    spark, corpus, scorer, cfg, tmp_path, monkeypatch
+):
+    """A resumed round runs under AQE. When it admits nothing, AQE prunes the
+    joins above the empty admitted set at runtime, and with them the
+    observers below; the round must still finish and report zeros."""
+    from topicrawler_spark.crawl import driver
+
+    aqe = []
+    real_round = driver.run_round
+
+    def spy(spark_, *args, **kwargs):
+        aqe.append(spark_.conf.get("spark.sql.adaptive.enabled"))
+        return real_round(spark_, *args, **kwargs)
+
+    monkeypatch.setattr(driver, "run_round", spy)
+    # a lifetime budget of one page per host leaves round 3 nothing to admit;
+    # salt_min_frontier=0 keeps the Bloom-sized resume in the at-scale regime
+    c = replace(cfg, queue_total_budget=1, bloom_min_seen=0, salt_min_frontier=0)
+    pages = pages_dataframe(spark, corpus)
+    ckpt = str(tmp_path / "ck")
+    run_crawl(spark, pages, corpus.seeds, scorer, 2, c, checkpoint_dir=ckpt)
+    run = run_crawl(spark, pages, corpus.seeds, scorer, 3, c, checkpoint_dir=ckpt)
+    assert aqe[-1] == "true"
+    (m,) = run.metrics
+    assert m["round"] == 3
+    assert m["admitted"] == m["fetched"] == m["urls_new"] == 0
+    assert m["bloom_fresh"] == m["bloom_suspect"] == 0
+    assert m["perp_min"] is None

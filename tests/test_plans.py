@@ -7,6 +7,7 @@
 - small dimension joins broadcast
 - n-gram counting uses partial (map-side) aggregation
 - the heavy html column is pruned from post-extraction plans
+- the memory-mode seen set stays a union of checkpointed leaves
 """
 
 from __future__ import annotations
@@ -133,7 +134,7 @@ def _mini_round(spark, by_host=False, **cfg_kw):
     pp = prepare_pages(pages, by_host=by_host).localCheckpoint(eager=True)
     return run_round(
         spark, state, pp, scorer_bc, robots, cfg,
-        collect_metrics=False, frontier_size_hint=0, ops=ops, host_fetched_map={},
+        frontier_size_hint=0, ops=ops, host_fetched_map={},
     )
 
 
@@ -249,7 +250,7 @@ def test_scoring_stage_is_host_partitioned(spark):
     pp = prepare_pages(pages).localCheckpoint(eager=True)
     _, result = run_round(
         spark, state, pp, scorer_bc, robots, cfg,
-        collect_metrics=False, frontier_size_hint=0, ops=ops, host_fetched_map={},
+        frontier_size_hint=0, ops=ops, host_fetched_map={},
     )
     plan = _plan(result.results, "formatted")
     assert "ArrowEvalPython" in plan  # the scoring stage
@@ -294,3 +295,29 @@ def test_pivot_stats_lookup_scans_dimension_once(spark):
     n_scans_pivot = _plan(pivot).count(d + "/stats")
     assert n_scans_legacy == 2 * order - 1
     assert n_scans_pivot == 1
+
+
+def test_memory_mode_seen_set_is_checkpointed_leaves(spark):
+    """In memory mode the seen set is carried as a union of checkpointed
+    leaves, the seed set included: no round's seen scan recomputes the seed
+    canonicalization plan."""
+    from topicrawler_spark.crawl.config import CrawlConfig
+    from topicrawler_spark.crawl.driver import run_crawl
+    from topicrawler_spark.datagen import generate_corpus, pages_dataframe, topic_corpus
+    from topicrawler_spark.lm.local import LocalLM
+    from topicrawler_spark.lm.perplexity import DocumentScorer
+
+    corpus = generate_corpus(n_pages=120, n_hosts=5, n_seeds=3, seed=5)
+    lm = LocalLM.from_texts([topic_corpus(5, 60)], order=3)
+    run = run_crawl(
+        spark, pages_dataframe(spark, corpus), corpus.seeds,
+        DocumentScorer(lm, "kneser-ney"), 2,
+        CrawlConfig(order=3, per_host_quota=5, max_hops=5),
+    )
+    assert run.state.round_no == 2
+    plan_leaves = run.state.seen._jdf.queryExecution().logical().collectLeaves()
+    leaves = [plan_leaves.apply(i) for i in range(plan_leaves.size())]
+    assert len(leaves) == 3  # the seed set and one segment per round
+    for leaf in leaves:
+        assert leaf.getClass().getSimpleName() == "LogicalRDD"
+        assert leaf.rdd().isCheckpointed()

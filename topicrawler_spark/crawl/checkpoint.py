@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,7 +28,7 @@ from topicrawler_spark.crawl.round import (
 )
 
 STATE_TABLES = ("frontier", "seen_delta", "host_fetched")
-LOG_TABLES = ("results", "fetch_log", "partition_metrics")
+LOG_TABLES = ("results", "fetch_log")
 
 
 class CheckpointStore:
@@ -66,13 +65,10 @@ class CheckpointStore:
         # newly-discovered segment (the Iceberg-append equivalent — at 10^10
         # URLs rewriting the full set per round would be an ~80 GB write);
         # round 0's segment is the seed set, resume() unions the segments
-        if result is None:
-            if seen_delta is None:
-                seen_delta = state.seen
-        else:
-            seen_delta = result.enqueued.select("url_hash", "canon")
-            if result.seen_extra is not None:
-                seen_delta = seen_delta.unionByName(result.seen_extra)
+        if result is not None:
+            seen_delta = result.seen_segment
+        elif seen_delta is None:
+            seen_delta = state.seen
         seen_delta.write.mode("overwrite").parquet(self._dir(r, "seen_delta"))
         manifest = {"round": r, "tables": list(STATE_TABLES)}
         if state.bloom is not None:
@@ -97,9 +93,6 @@ class CheckpointStore:
         if result is not None:
             result.results.write.mode("overwrite").parquet(self._dir(r, "results"))
             result.fetch_log.write.mode("overwrite").parquet(self._dir(r, "fetch_log"))
-            result.partition_metrics.write.mode("overwrite").parquet(
-                self._dir(r, "partition_metrics")
-            )
             manifest["tables"] += list(LOG_TABLES)
             manifest["metrics"] = {
                 k: (None if v is None else (float(v) if isinstance(v, float) else v))
@@ -190,9 +183,3 @@ class CheckpointStore:
     def metrics(self, round_no: int) -> dict:
         with open(self._manifest(round_no)) as f:
             return json.load(f).get("metrics", {})
-
-    def drop_after(self, round_no: int) -> None:
-        """Discard uncommitted/newer rounds (crash cleanup)."""
-        for d in list(os.listdir(self.root)):
-            if d.startswith("r") and int(d[1:]) > round_no:
-                shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)

@@ -8,7 +8,7 @@ import os
 import sys
 import threading
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,11 +17,15 @@ from topicrawler_spark.crawl.checkpoint import CheckpointStore
 from topicrawler_spark.crawl.config import CrawlConfig
 from topicrawler_spark.crawl.robots import build_robots_table
 from topicrawler_spark.crawl.round import (
+    HOST_SCHEMA,
     CrawlState,
     init_state,
     run_round,
 )
 from topicrawler_spark.lm.perplexity import DocumentScorer
+
+AQE_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+AQE_PROPAGATE_EMPTY = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
 
 
 @dataclass
@@ -39,7 +43,6 @@ def run_crawl(
     cfg: CrawlConfig | None = None,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    collect_metrics: bool = True,
     pages_prepared: bool = False,
     lm_counts=None,
 ) -> CrawlRun:
@@ -60,6 +63,11 @@ def run_crawl(
         state = init_state(spark, seeds, cfg)
         if store is not None:
             store.commit_round(state, None)
+        else:
+            # memory mode carries the seen set as a union of checkpointed
+            # leaves; make the seed set one too, or its canonicalization plan
+            # rides inside every round's seen scan until the first compaction
+            state = replace(state, seen=state.seen.localCheckpoint(eager=False))
 
     scorer_bc = spark.sparkContext.broadcast(scorer)
     if cfg.schedule_robots_prereqs:
@@ -104,7 +112,6 @@ def run_crawl(
     ops = build_round_ops(cfg, scorer_bc, robots, join_scorer=join_scorer)
 
     all_metrics: list[dict] = []
-    empty_frontier = False
     # Driver-side budget fast path: only while the robots host count stayed
     # below the collect threshold (robots.delays present). Past it the
     # per-round host_fetched collect would itself be a driver bottleneck, so
@@ -118,13 +125,6 @@ def run_crawl(
         else {r["host"]: r["fetched"] for r in state.host_fetched.collect()}
     )
 
-    def _fetched_total(hf) -> int:
-        if host_fetched_map is not None:
-            return sum(host_fetched_map.values())
-        row = hf.agg(F.coalesce(F.sum("fetched"), F.lit(0)).alias("t")).collect()[0]
-        return int(row["t"])
-
-    prev_fetched_total = _fetched_total(state.host_fetched)
     # previous round's fetched-page count — run_round's scoring-bin hint
     # (None on the first round: the frontier-size hint stands in there)
     last_fetched: int | None = None
@@ -137,6 +137,7 @@ def run_crawl(
     frontier_hint: int | None = len(seeds) if state.round_no == 0 else None
     aqe_orig = spark.conf.get("spark.sql.adaptive.enabled", "true")
     shuffle_orig = spark.conf.get("spark.sql.shuffle.partitions", "200")
+    excluded_orig = spark.conf.get(AQE_EXCLUDED_RULES, None)
     cores = spark.sparkContext.defaultParallelism
     # None = frontier emptiness unknown (fresh/resumed state): check once.
     # After a round that discovered > 0 URLs the frontier is non-empty by
@@ -166,12 +167,19 @@ def run_crawl(
                 raise bg_error.pop()
 
     try:
+        # The round metrics are observations. With AQE on, a branch that
+        # turns out empty at runtime is pruned together with its observer
+        # (Observation.get then fails), so the crawl runs without that rule.
+        spark.conf.set(
+            AQE_EXCLUDED_RULES,
+            ",".join(r for r in (excluded_orig, AQE_PROPAGATE_EMPTY) if r),
+        )
         for _ in range(state.round_no, rounds):
-            if empty_frontier or (last_enq is None or last_enq == 0):
+            if last_enq is None or last_enq == 0:
                 # rare path (fresh/resumed state or a zero-discovery round):
                 # the emptiness probe is an action — sync with the committer
                 _join_bg()
-                if empty_frontier or state.frontier.isEmpty():
+                if state.frontier.isEmpty():
                     break
             # Post-resume with bloom enabled: one count over the committed
             # (parquet-backed) seen set — needed for bloom sizing anyway, and
@@ -215,8 +223,6 @@ def run_crawl(
             if cfg.bloom_min_seen is not None and (
                 frontier_hint is None or frontier_hint >= cfg.bloom_min_seen
             ):
-                from dataclasses import replace as _dc_replace
-
                 from topicrawler_spark.crawl.bloom import BloomParams, bloom_add
 
                 active = state.bloom_params or (
@@ -237,42 +243,36 @@ def run_crawl(
                 ):
                     build = BloomParams.for_keys(frontier_hint, n_hashes=cfg.bloom_hashes)
                 if build is not None:
-                    state = _dc_replace(
+                    state = replace(
                         state,
                         bloom=bloom_add(
                             spark, None, state.seen.select("url_hash"), build
                         ).localCheckpoint(eager=False),
                         bloom_params=build,
                     )
-            timing = os.environ.get("SPARK_GRAFT_TIMING") == "1"
-            if collect_metrics:
-                # metrics mode runs actions INSIDE run_round — sync with the
-                # background committer first (bench mode is action-free in
-                # run_round, so the overlap only exists there)
-                _join_bg()
             t0 = time.time()
             # the pre-round seen set: a union of materialized leaves that the
             # post-round segment checkpoint extends without re-copying it
             prev_seen = state.seen
+            # run_round is action-free, so its plan construction overlaps the
+            # previous round's background commit
             state, result = run_round(
                 spark, state, pages, scorer_bc, robots, cfg,
-                collect_metrics=collect_metrics, frontier_size_hint=frontier_hint,
-                ops=ops, host_fetched_map=host_fetched_map,
-                fetched_hint=last_fetched,
+                frontier_size_hint=frontier_hint, ops=ops,
+                host_fetched_map=host_fetched_map, fetched_hint=last_fetched,
             )
             t_plan = time.time() - t0
-            all_metrics.append(result.metrics)
             # plan construction is done — sync with the previous round's
             # background committer before this round's first action
             _join_bg()
-            # prereq mode: the seen set also grows by the synthesized robots
-            # rows (cached in run_round), which urls_discovered never counts —
-            # fold them into the hint increment or the bloom saturation
-            # rebuild fires late on robots-heavy crawls. One count over a
-            # cached frame, off the bench path (seen_extra is None there).
-            seen_extra_rows = (
-                result.seen_extra.count() if result.seen_extra is not None else 0
-            )
+            t0 = time.time()
+            # The foreground step: one dedicated job per cache in
+            # RoundResult.fills, in dependency order. The observations ride
+            # on those jobs, so the round's metrics cost no job of their own.
+            for df in result.fills:
+                df.count()
+            metrics = result.resolve_metrics()
+            all_metrics.append(metrics)
             # Incremental topic-LM refresh: fold this round's focused pages
             # into the count table (one union + hash aggregate — scales with
             # the round's pages, not the accumulated table). The rebuilt
@@ -307,20 +307,11 @@ def run_crawl(
                     # the per-refresh lineage growth to a leaf
                     lm_refreshed = lm_refreshed.localCheckpoint(eager=True)
             if store is not None:
-                # backfill the throughput counters BEFORE commit so the
-                # persisted manifest carries them (bench mode leaves
-                # urls_discovered None; 'fetched' derives from the per-host
-                # totals delta). enqueued/host_fetched read from cached
-                # intermediates — cheap rescans.
-                if result.metrics.get("urls_discovered", 0) is None:
-                    result.metrics["urls_discovered"] = result.enqueued.count()
                 if not distributed_budget:
                     host_fetched_map = {
                         r["host"]: r["fetched"] for r in state.host_fetched.collect()
                     }
-                total_fetched = _fetched_total(state.host_fetched)
-                result.metrics.setdefault("fetched", total_fetched - prev_fetched_total)
-                prev_fetched_total = total_fetched
+                # the manifest carries the resolved metrics
                 store.commit_round(state, result, lm_counts=lm_refreshed)
                 # re-read committed state: cuts the lazy lineage chain and makes
                 # the carried state exactly the committed bytes
@@ -331,83 +322,26 @@ def run_crawl(
                 for df in result.cached:
                     df.unpersist()
             else:
-                # memory-only mode: the round executes as TWO queries —
-                #  1. the fused per-host totals + discovery-counter collect.
-                #    This is the round's HEAVY job: it materializes the cached
-                #    admitted/scored/new_unique intermediates (fetch join,
-                #    Arrow scoring pass, expansion, dedup) that everything
-                #    else rescans.
-                #  2. the frontier + seen checkpoint writes — pure rescans of
-                #    those caches, run in a BACKGROUND thread overlapping the
-                #    next round's plan construction; joined before the next
-                #    foreground action.
-                t0 = time.time()
-                need_enq = result.metrics.get("urls_discovered", 0) is None
-                # Cache-fill serialization: the fused round job's DAG scans
-                # the cached Arrow-scored relation from SIBLING stages. The
-                # task scheduler launches the second sibling's tasks as the
-                # first one's final wave drains, and any partition it reaches
-                # before the twin finishes re-runs the entire Python scoring
-                # pass for that partition — the duplication lands on exactly
-                # the straggler (skewed-host) partitions and grows with the
-                # number of concurrent task slots (measured: +25-30% scoring
-                # core-seconds at local[8], +8% at local[2]; on a wide
-                # cluster every sibling task slot is a potential duplicate).
-                # One dedicated count() builds the cache (and the admitted
-                # cache beneath it) at full parallelism with no competing
-                # stage, then every fused-job stage scans built partitions.
-                # Metrics mode skips this: run_round's in-round counters
-                # already materialized the cache sequentially.
-                if not collect_metrics:
-                    # join-mode scoring: fill the Arrow-pass cache first
-                    # (single consumer), then the perp-joined cache (its two
-                    # sibling branches then hit a built cache) — see
-                    # RoundResult.score_prefill.
-                    for _cache in result.score_prefill:
-                        _cache.count()
-                    if result.score_cache is not None:
-                        result.score_cache.count()
+                # memory-only mode: after the foreground fills, the per-host
+                # totals are one small job over the built caches; the
+                # frontier + seen checkpoint writes, pure rescans of those
+                # caches, run in a BACKGROUND thread overlapping the next
+                # round's plan construction, joined before the next
+                # foreground action.
                 if distributed_budget:
                     # never collect the (at-scale, host-cardinality) fetch
                     # totals: materialize and cut lineage executor-side
                     host_fetched = state.host_fetched.localCheckpoint(eager=True)
-                    total_fetched = _fetched_total(host_fetched)
-                    if need_enq:
-                        result.metrics["urls_discovered"] = result.enqueued.count()
                 else:
-                    # ONE job for the per-host totals AND the discovery
-                    # counter (both rescan this round's caches; fusing them
-                    # saves a job launch per round — fixed driver latency that
-                    # does not shrink with cores). The counter rides along as
-                    # a sentinel-keyed row ('~' never starts a host key).
-                    hf = state.host_fetched.select("host", "fetched")
-                    if need_enq:
-                        hf = hf.unionByName(
-                            result.enqueued.groupBy()
-                            .agg(F.count(F.lit(1)).alias("fetched"))
-                            .select(F.lit("~enq").alias("host"), "fetched")
-                        )
                     # threshold-gated small table: one task instead of a
                     # shuffle-partition fan of micro-tasks (launch latency is
                     # per-round driver time that does not shrink with cores)
-                    rows = hf.coalesce(1).collect()
                     host_rows = [
-                        (r["host"], r["fetched"]) for r in rows if r["host"] != "~enq"
+                        (r["host"], r["fetched"])
+                        for r in state.host_fetched.coalesce(1).collect()
                     ]
-                    if need_enq:
-                        result.metrics["urls_discovered"] = next(
-                            (int(r["fetched"]) for r in rows if r["host"] == "~enq"), 0
-                        )
                     host_fetched_map = dict(host_rows)
-                    total_fetched = sum(f for _, f in host_rows)
-                    host_fetched = (
-                        spark.createDataFrame(host_rows, "host string, fetched long")
-                        if host_rows
-                        else spark.createDataFrame([], "host string, fetched long")
-                    )
-                result.metrics.setdefault("fetched", total_fetched - prev_fetched_total)
-                prev_fetched_total = total_fetched
-                t_exec = time.time() - t0
+                    host_fetched = spark.createDataFrame(host_rows, HOST_SCHEMA)
                 # lazy localCheckpoints: flatten the frontier's plan to a
                 # leaf; the background committer materializes it (the bloom's
                 # cogroup chain stays lazy — it materializes inside the next
@@ -422,10 +356,7 @@ def run_crawl(
                 # cfg.seen_compact_every rounds the union compacts to one
                 # leaf so plan width stays bounded over a long crawl.
                 seen_seg_rounds += 1
-                if (
-                    result.seen_segment is not None
-                    and seen_seg_rounds < cfg.seen_compact_every
-                ):
+                if seen_seg_rounds < cfg.seen_compact_every:
                     seen_commit = result.seen_segment.localCheckpoint(eager=False)
                     seen = prev_seen.unionByName(seen_commit)
                 else:
@@ -464,14 +395,13 @@ def run_crawl(
                     state.round_no, frontier, seen, host_fetched, bloom,
                     robots_state, state.bloom_params,
                 )
-                empty_frontier = False
-                if timing:
-                    print(
-                        f"[round {state.round_no}] plan={t_plan:.2f}s exec={t_exec:.2f}s "
-                        f"bgwait={t_wait:.2f}s "
-                        f"enq={result.metrics.get('urls_discovered')} fetched={result.metrics.get('fetched')}",
-                        file=sys.stderr,
-                    )
+            if os.environ.get("SPARK_GRAFT_TIMING") == "1":
+                print(
+                    f"[round {state.round_no}] plan={t_plan:.2f}s "
+                    f"exec={time.time() - t0:.2f}s bgwait={t_wait:.2f}s "
+                    f"enq={metrics['urls_new']} fetched={metrics['fetched']}",
+                    file=sys.stderr,
+                )
             if lm_refreshed is not None:
                 # rebuild the scoring campaign from the refreshed table:
                 # stats dimension + discounts/histogram constants + base
@@ -494,17 +424,17 @@ def run_crawl(
             # next round's scoring-bin hint: this round's fetched count is
             # the best action-free predictor of next round's page volume
             # (admission quotas move slowly round-to-round)
-            last_fetched = result.metrics.get("fetched") or last_fetched
-            # running upper bound on frontier size: everything ever discovered
-            enq = result.metrics.get("urls_discovered", result.metrics.get("urls_new", 0)) or 0
-            last_enq = enq
+            last_fetched = metrics["fetched"] or last_fetched
+            last_enq = metrics["urls_new"]
             if frontier_hint is None:
                 # first post-resume round: one count over the (parquet-backed,
                 # just-committed) seen set restores hint-driven regime
                 # switching; thereafter the hint accumulates per-round.
                 frontier_hint = state.seen.count()
             else:
-                frontier_hint += enq + seen_extra_rows
+                # running upper bound on frontier size: everything ever
+                # discovered, prereq-mode robots URLs included
+                frontier_hint += last_enq + result.n_prereqs
     finally:
         # drain the in-flight background committer so the returned state is
         # fully materialized (and its failure, if any, surfaces here)
@@ -513,4 +443,8 @@ def run_crawl(
         # them even when a round fails mid-crawl
         spark.conf.set("spark.sql.adaptive.enabled", aqe_orig)
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_orig)
+        if excluded_orig is None:
+            spark.conf.unset(AQE_EXCLUDED_RULES)
+        else:
+            spark.conf.set(AQE_EXCLUDED_RULES, excluded_orig)
     return CrawlRun(state, all_metrics)

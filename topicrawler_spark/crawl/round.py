@@ -21,11 +21,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, replace
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from topicrawler_spark.crawl.config import CrawlConfig
-from topicrawler_spark.crawl.priority import apply_priority
+from topicrawler_spark.crawl.priority import HIGH, HIGHEST, MEDIUM, NORMAL, apply_priority
 from topicrawler_spark.crawl.ranking import (
     partition_probe_ints,
     per_host_top_k,
@@ -157,43 +157,53 @@ def build_round_ops(
 class RoundResult:
     fetch_log: DataFrame  # round, host, host_rank, canon, url
     results: DataFrame  # url, canon, host, perp, text, plain_abbrv
+    # {"round": n} until resolve_metrics() merges in the observed aggregates
     metrics: dict
-    partition_metrics: DataFrame
     cached: tuple = ()  # cached intermediates; unpersist after state commit
-    enqueued: DataFrame | None = None  # the newly enqueued rows (lazy)
-    # additional (url_hash, canon) rows this round appended to the seen set
-    # beyond `enqueued` (prereq-mode synthesized robots URLs) — the commit
-    # must include them in the round's seen_delta segment or resume would
-    # silently forget them
-    seen_extra: DataFrame | None = None
-    # the cached frame whose materialization runs the round's Arrow scoring
-    # pass (`scored` / `with_ng`). In action-free (bench) mode the fused
-    # round job contains SIBLING stages that each scan this cache; submitted
-    # together they race the cache fill, and every task that reaches a
-    # partition before its twin finishes recomputes the whole Python pass
-    # for it (measured at local[8]: +25-30% duplicate scoring core-seconds
-    # per round, concentrated on exactly the straggler partitions — and the
-    # duplication grows with core count). The driver materializes this frame
-    # with one dedicated job BEFORE the fused collect so every downstream
-    # stage scans a fully built cache.
-    score_cache: DataFrame | None = None
-    # caches `score_cache` itself depends on, in dependency order — join-mode
-    # scoring sets (with_ng,): the per-page perp chain inside `scored` scans
-    # the Arrow-pass cache from TWO sibling branches (the distinct-ngram
-    # score and the join's probe side), so `with_ng` must be built by its own
-    # single-consumer job before `scored`'s fill or the siblings race and
-    # re-run the Python pass per stolen partition. The driver counts these
-    # before `score_cache`.
-    score_prefill: tuple = ()
+    # the cached frames the driver fills with one dedicated count() each, in
+    # dependency order, before any other job of the round: the Arrow-pass
+    # cache(s) (`scored`; join mode `with_ng` first, then the perp-joined
+    # `scored`), then `new_unique`. A fused job whose SIBLING stages scan an
+    # unbuilt cache races its fill, and every task that reaches a partition
+    # before its twin finishes recomputes the whole Python pass for it
+    # (measured at local[8]: +25-30% duplicate scoring core-seconds per
+    # round, concentrated on the straggler partitions, growing with core
+    # count). Filling them also completes every metrics observation.
+    fills: tuple = ()
+    # DataFrame.observe handles whose aggregates make up the round's metrics;
+    # they fill during the cache-filling jobs, never in a job of their own
+    observations: tuple = ()
+    # prereq mode: observes the synthesized robots URLs this round added to
+    # the seen set (filled with the admitted cache)
+    prereq_obs: Observation | None = None
     # this round's (url_hash, canon) additions to the seen set — the SEGMENT
     # whose union with the prior seen set IS the new state's seen. Memory
     # mode checkpoints only this (the prior set is already a union of
     # materialized leaves): re-checkpointing the full union every round
     # copies the ENTIRE seen set per round — O(rounds * |seen|) write volume
     # over a crawl, and the copy is pure non-scaling overhead in every
-    # round's background commit. Matches the store's append-only seen
-    # segments (checkpoint.py).
+    # round's background commit. The store commits it as the round's
+    # append-only seen_delta (checkpoint.py).
     seen_segment: DataFrame | None = None
+
+    def resolve_metrics(self) -> dict:
+        """Merge the observed aggregates into ``metrics``; call after the
+        jobs that fill ``fills`` (Observation.get blocks until then)."""
+        for obs in self.observations:
+            self.metrics.update(obs.get)
+        return self.metrics
+
+    @property
+    def n_prereqs(self) -> int:
+        return self.prereq_obs.get["n"] if self.prereq_obs is not None else 0
+
+
+def _observe(df: DataFrame, *aggs: Column) -> tuple[DataFrame, Observation]:
+    """``df`` with ``aggs`` attached as a fresh Observation. Observe the
+    TOP of a frame that is then cached: the first query that fills the cache
+    (a downstream one included) reports the aggregates."""
+    obs = Observation()
+    return df.observe(obs, *aggs), obs
 
 
 def score_bin_count(
@@ -427,7 +437,6 @@ def run_round(
     scorer_bc,
     robots: RobotsTable,
     cfg: CrawlConfig | None = None,
-    collect_metrics: bool = True,
     frontier_size_hint: int | None = None,
     ops: RoundOps | None = None,
     host_fetched_map: dict[str, int] | None = None,
@@ -524,6 +533,7 @@ def run_round(
             F.lit(0).alias("retries"),
             F.lit(0).alias("not_before"),
         )
+        prereqs, prereq_obs = _observe(prereqs, F.count(F.lit(1)).alias("n"))
         prereqs.cache()
         with_prereqs = state.frontier.unionByName(prereqs)
         known_rows = with_prereqs.join(known_hosts, "host", "left_semi")
@@ -534,7 +544,7 @@ def run_round(
         admissible = allowed_known.unionByName(unknown_rows.filter(is_robots_url))
     else:
         rules_df = robots.rules
-        prereqs = None
+        prereqs = prereq_obs = None
         prereq_zip_cached = ()
         frontier_eff = state.frontier
         admissible = state.frontier
@@ -623,8 +633,9 @@ def run_round(
             .select("host")
         )
         fr = fr.join(F.broadcast(active), "host", "left_semi")
-    admitted = per_host_top_k(fr, "k", ORDER_COLS, n_salt=n_salt).drop(
-        "quota", "fetched", "k"
+    admitted, adm_obs = _observe(
+        per_host_top_k(fr, "k", ORDER_COLS, n_salt=n_salt).drop("quota", "fetched", "k"),
+        F.count(F.lit(1)).alias("admitted"),
     )
     admitted.cache()
     # per round the admitted set is bounded by sum(host quotas) — a broadcast
@@ -725,6 +736,7 @@ def run_round(
             fetched = fetched.repartition(n_bins, "host")
     is_robots = F.col("canon").endswith("/robots.txt")
     got_page = F.col("html").isNotNull()
+    page_ok = F.col("fetch_ok") & ~is_robots  # a fetched content page
 
     # ---- 3. score + expand in ONE Arrow pass over html, then drop it -------
     # extract + outlinks + perplexity are fused into a single pandas UDF:
@@ -752,8 +764,7 @@ def run_round(
                 "perp": F.col("_pp.perp"),
             }
         ).drop("_pp")
-        scored.cache()
-        score_cached: tuple = (scored,)
+        score_fills: tuple = ()
     else:
         # relational scoring: the page UDF emitted gated ngrams; score each
         # DISTINCT ngram once against the per-crawl stats dimension, re-join
@@ -769,7 +780,7 @@ def run_round(
         # pass over html), cache `scored` (what everything rescans), and do
         # NOT cache `per` — it materializes exactly once inside `scored`'s
         # dedicated fill, after `with_ng` is already built (the driver fills
-        # the two caches in dependency order; see RoundResult.score_prefill).
+        # the two caches in dependency order; see RoundResult.fills).
         from topicrawler_spark.lm.perplexity import join_perp_column, score_pages_join
 
         with_ng = base_scored.withColumns(
@@ -785,8 +796,9 @@ def run_round(
             }
         ).drop("_pp")
         with_ng.cache()
+        score_fills = (with_ng,)
         per = score_pages_join(
-            with_ng.filter(F.col("fetch_ok") & ~is_robots).select("canon", "ngrams"),
+            with_ng.filter(page_ok).select("canon", "ngrams"),
             ops.join_score,
         )
         per_side = F.broadcast(per) if small_round else per
@@ -803,13 +815,25 @@ def run_round(
             )
         scored = (
             with_ng.join(per_side, "canon", "left")
-            .withColumn("perp", F.when(F.col("fetch_ok") & ~is_robots, perp_tree))
+            .withColumn("perp", F.when(page_ok, perp_tree))
             .drop("ngrams", "_perp_s", "_perp_n")
         )
-        scored.cache()
-        score_cached = (with_ng, scored)
+    # the reference's perplexity report (min/max/avg over scored pages),
+    # observed while the scoring pass fills the cache
+    perp_pos = F.when(page_ok & (F.col("perp") > 0), F.col("perp"))
+    scored, score_obs = _observe(
+        scored,
+        F.count_if(F.col("fetch_ok")).alias("fetched"),
+        F.count_if(page_ok).alias("scored"),
+        F.min(perp_pos).alias("perp_min"),
+        F.max(F.when(page_ok, F.col("perp"))).alias("perp_max"),
+        F.avg(perp_pos).alias("perp_avg"),
+        F.count_if(page_ok & (F.col("perp") <= 1)).alias("n_rejected_pages"),
+    )
+    scored.cache()
+    score_fills += (scored,)
 
-    results = scored.filter(F.col("fetch_ok") & ~is_robots).select(
+    results = scored.filter(page_ok).select(
         F.lit(round_no).alias("round"), "url", "canon", "host", "perp", "text", "hops"
     )
 
@@ -864,7 +888,7 @@ def run_round(
 
     # ---- 4. candidate chain --------------------------------------------------
     cands = (
-        scored.filter(F.col("fetch_ok") & ~is_robots)
+        scored.filter(page_ok)
         .select(
             F.col("ord_r").alias("p_ord_r"),
             F.col("ord_k").alias("p_ord_k"),
@@ -955,7 +979,7 @@ def run_round(
     seen_side = (
         F.broadcast(state.seen) if bcast_seen else state.seen
     ).select(F.col("url_hash").alias("_seen_h"))
-    _bloom_fresh = _bloom_suspect = None
+    bloom_obs: tuple = ()
     if state.bloom is not None:
         # Bloom pre-filter: definitely-new candidates skip the exact
         # anti-join against the (10^10-row) seen table entirely; only the
@@ -964,11 +988,19 @@ def run_round(
         from topicrawler_spark.crawl.bloom import bloom_probe
 
         probed = bloom_probe(cands, state.bloom, state.bloom_params or cfg.bloom_params())
-        fresh = probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        _bloom_fresh, _bloom_suspect = fresh, None
+        # pre-filter effectiveness: `fresh` candidates skip the exact seen
+        # anti-join entirely; only `suspect` probes it
+        fresh, fresh_obs = _observe(
+            probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen"),
+            F.count(F.lit(1)).alias("bloom_fresh"),
+        )
+        bloom_obs = (fresh_obs,)
         if cfg.bloom_exact_confirm:
-            suspect = probed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-            _bloom_suspect = suspect
+            suspect, suspect_obs = _observe(
+                probed.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
+                F.count(F.lit(1)).alias("bloom_suspect"),
+            )
+            bloom_obs += (suspect_obs,)
             confirmed = suspect.join(
                 seen_side, suspect["url_hash"] == F.col("_seen_h"), "left_anti"
             )
@@ -983,6 +1015,17 @@ def run_round(
             cands["url_hash"] == F.col("_seen_h"),
             "left_anti",
         )
+    # the discovery counter: unique in-scope candidates after the seen
+    # anti-join, before the robots gate (robots-blocked URLs did the full
+    # expansion work and are marked seen, they just never enqueue)
+    new_unique, new_obs = _observe(
+        new_unique,
+        F.count(F.lit(1)).alias("urls_new"),
+        *[
+            F.count_if(F.col("directive") == d).alias(f"n_directive_{d}")
+            for d in (HIGHEST, HIGH, MEDIUM, NORMAL)
+        ],
+    )
     new_unique.cache()
 
     # scheduled => seen (robots-blocked URLs are seen but never enqueued).
@@ -1042,7 +1085,7 @@ def run_round(
         )
     ).unionByName(retry)
 
-    # ---- 5. budgets + metrics -------------------------------------------------
+    # ---- 5. budgets -----------------------------------------------------------
     fetch_counts = (
         scored.filter(F.col("fetch_ok"))
         .groupBy("host")
@@ -1053,52 +1096,6 @@ def run_round(
         .groupBy("host")
         .agg(F.sum("fetched").alias("fetched"))
     )
-
-    if collect_metrics:
-        perp_stats = results.agg(
-            F.count(F.lit(1)).alias("scored"),
-            F.min(F.when(F.col("perp") > 0, F.col("perp"))).alias("perp_min"),
-            F.max("perp").alias("perp_max"),
-            F.avg(F.when(F.col("perp") > 0, F.col("perp"))).alias("perp_avg"),
-            F.count(F.when(F.col("perp") <= 1, 1)).alias("n_rejected_pages"),
-        ).collect()[0]
-        directive_counts = {
-            f"n_directive_{r['directive']}": r["c"]
-            for r in new_unique.groupBy("directive").agg(F.count(F.lit(1)).alias("c")).collect()
-        }
-        metrics = {
-            "round": round_no,
-            "admitted": admitted.count(),
-            "fetched": scored.filter(F.col("fetch_ok")).count(),
-            "scored": perp_stats["scored"],
-            "perp_min": perp_stats["perp_min"],
-            "perp_max": perp_stats["perp_max"],
-            "perp_avg": perp_stats["perp_avg"],
-            "n_rejected_pages": perp_stats["n_rejected_pages"],
-            "urls_new": new_unique.count(),
-            **directive_counts,
-        }
-        if _bloom_fresh is not None:
-            # pre-filter effectiveness: `fresh` candidates skipped the exact
-            # seen anti-join entirely; only `suspect` probed it (diagnostic
-            # path only — bench mode stays action-free)
-            metrics["bloom_fresh"] = _bloom_fresh.count()
-            if _bloom_suspect is not None:
-                metrics["bloom_suspect"] = _bloom_suspect.count()
-        partition_metrics = (
-            new_unique.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("round", F.lit(round_no))
-        )
-    else:
-        # bench mode: throughput counters only, all lazy. None: the driver
-        # fills this by counting the cached discovery set — the SAME
-        # definition in every regime: unique in-scope candidates after the
-        # seen anti-join, before the robots gate (robots-blocked URLs did the
-        # full expansion work and are marked seen, they just never enqueue).
-        # `fetched` comes from the (tiny) host_fetched table at state-commit.
-        metrics = {"round": round_no, "urls_discovered": None}
-        partition_metrics = spark.createDataFrame([], "partition_id int, rows long, round int")
 
     if state.bloom is not None:
         from topicrawler_spark.crawl.bloom import bloom_add
@@ -1117,14 +1114,12 @@ def run_round(
     seen_segment = new_unique.select("url_hash", "canon")
     if prereq_mode:
         seen_segment = seen_segment.unionByName(prereqs.select("url_hash", "canon"))
+    fills = score_fills + (new_unique,)
     return new_state, RoundResult(
-        fetch_log, results, metrics, partition_metrics,
-        seen_extra=prereqs.select("url_hash", "canon") if prereq_mode else None,
-        cached=(admitted,) + score_cached + zip_cached + prereq_cached + (new_unique,),
-        # the per-round discovery counter: the deduped candidate set, straight
-        # off its cache — counting `enq` would re-run the robots UDF
-        enqueued=new_unique,
-        score_cache=score_cached[-1],
-        score_prefill=score_cached[:-1],
+        fetch_log, results, {"round": round_no},
+        cached=(admitted,) + zip_cached + prereq_cached + fills,
+        fills=fills,
+        observations=(adm_obs, score_obs, new_obs) + bloom_obs,
+        prereq_obs=prereq_obs,
         seen_segment=seen_segment,
     )

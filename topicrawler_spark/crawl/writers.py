@@ -93,29 +93,3 @@ def filter_lines_by_perplexity(df: DataFrame, max_perp: float = 1000.0, perp_col
     """The reference's FilterLines app: drop rows with perp > max."""
     return df.filter(F.col(perp_col) <= max_perp)
 
-
-def crawl_stats(results: DataFrame, last_n: int = 100) -> DataFrame:
-    """Running perplexity statistics incl. the last-N window (the reference's
-    report surface: min/max/avg overall and over the most recent N values)."""
-    from pyspark.sql import Window
-
-    valid = results.filter(F.col("perp") > 1)
-    overall = valid.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("perp").alias("perp_min"),
-        F.max("perp").alias("perp_max"),
-        F.avg("perp").alias("perp_avg"),
-    ).withColumn("window", F.lit("all"))
-    order_col = "warc_ts" if "warc_ts" in results.columns else "url"
-    recent = (
-        valid.withColumn("_rn", F.row_number().over(Window.orderBy(F.desc(order_col))))
-        .filter(F.col("_rn") <= last_n)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("perp").alias("perp_min"),
-            F.max("perp").alias("perp_max"),
-            F.avg("perp").alias("perp_avg"),
-        )
-        .withColumn("window", F.lit(f"last{last_n}"))
-    )
-    return overall.unionByName(recent)
