@@ -733,10 +733,10 @@ def q_laplace_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stupid_backoff_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-based Stupid Backoff scoring (order 2, reference early-return
     quirks) of bigrams + reversals."""
-    from topicrawler_spark.lm.counting import score_stupid_backoff_bigram_join
+    from topicrawler_spark.lm.counting import score_stupid_backoff_join
 
     counts, cand = _bigram_candidates(spark, sf_dir)
-    return score_stupid_backoff_bigram_join(cand, counts).select(
+    return score_stupid_backoff_join(cand, counts, 2).select(
         "ngram", F.round("sb_log10", 6).alias("sb_log10")
     )
 
@@ -745,10 +745,10 @@ def q_kn_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-based interpolated modified Kneser-Ney scoring (order 2, incl.
     discount auto-estimation fix-ups, punk clamp, pruning resets) of
     bigrams + reversals — the production crawl scorer's relational twin."""
-    from topicrawler_spark.lm.counting import score_kn_bigram_join
+    from topicrawler_spark.lm.counting import score_kn_join
 
     counts, cand = _bigram_candidates(spark, sf_dir)
-    return score_kn_bigram_join(cand, counts).select(
+    return score_kn_join(cand, counts, 2).select(
         "ngram", F.round("kn_log10", 6).alias("kn_log10")
     )
 

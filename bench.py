@@ -14,7 +14,9 @@ env knobs:
   BENCH_SEEDS          (seed URLs, default max(8, pages/50))
   BENCH_QUOTA          (per-host politeness quota, default 100)
   BENCH_SCORE_MODE     (broadcast|join — join benches the corpus-scale
-                       relational scoring path against the count table)
+                       relational scoring path: one explode/join/pivot
+                       lookup of the count-table stats per round)
+  BENCH_STORE          (canon|host — pages-store layout, default canon)
   BENCH_BLOOM_MIN_SEEN / BENCH_ORDINAL_MAX / BENCH_SCORE_WAVES
                        (regime-threshold experiment knobs)
 """
@@ -78,13 +80,6 @@ def main() -> None:
     # core) for straggler-tail tuning experiments.
     waves_env = os.environ.get("BENCH_SCORE_WAVES", "")
     waves_kw = {"score_waves": int(waves_env)} if waves_env else {}
-    # BENCH_PIVOT_MIN_STATS overrides join_pivot_min_stats (stats-dimension
-    # row count above which join scoring uses the single-exchange pivot
-    # lookup instead of 2n-1 broadcast joins); 0 forces the pivot form —
-    # the shape the 10^10-URL deployment runs, where the topic LM's stats
-    # dimension far exceeds any broadcast threshold.
-    pms_env = os.environ.get("BENCH_PIVOT_MIN_STATS", "")
-    pms_kw = {"join_pivot_min_stats": int(pms_env)} if pms_env else {}
     # BENCH_SCORE_MODE=join benches the corpus-scale RELATIONAL scoring path
     # (count-table joins instead of the broadcast LM — the regime once the
     # topic LM outgrows a driver broadcast). Results are parity-tested
@@ -99,7 +94,6 @@ def main() -> None:
         **bloom_kw,
         **ord_kw,
         **waves_kw,
-        **pms_kw,
     )
     from topicrawler_spark.crawl.round import prepare_pages
 

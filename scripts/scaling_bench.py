@@ -129,13 +129,14 @@ def compose() -> str:
         raise SystemExit("no BENCH/results_*.json to compose from")
 
     any_rec = next(iter(histories.values()))[-1]
-    low, high = any_rec["low_cores"], any_rec["high_cores"]
-    core_ratio = high / low
     latest_hw = any_rec["hw_before"]
 
     sections = []
     for mode, hist in histories.items():
         rec = _headline(hist)
+        # each section's core pair comes from its own headline window
+        low, high = rec["low_cores"], rec["high_cores"]
+        core_ratio = high / low
         r_low, r_high = rec["best_low"], rec["best_high"]
         t_low, t_high = r_low["detail"]["crawl_sec"], r_high["detail"]["crawl_sec"]
         thr_low, thr_high = r_low["value"], r_high["value"]
@@ -229,10 +230,10 @@ no-job-running gaps in a 99.6 s event-logged window). These costs are
 fixed per ROUND — invariant in page volume — so the 2-vs-8-core pair at
 sandbox volumes measures them at their worst: at the 10^10-URL frontier a
 round carries ~10^4x the pages per executor-slot and the data term
-dominates the fixed term by orders of magnitude. The two stats-lookup
-regimes (2n-1 broadcast joins vs single-exchange pivot) measured
-wall-identical at 8 cores (75.8 s), so the regime threshold is not the
-bottleneck.
+dominates the fixed term by orders of magnitude. The stats lookup once
+had two forms, 2n-1 broadcast joins and a single-exchange pivot; they
+measured wall-identical at 8 cores (75.8 s), and only the single-exchange
+explode/join/pivot lookup remains.
 """
         sec += f"""
 Raw JSON ({mode}, headline window):
@@ -252,7 +253,7 @@ batteried: the broadcast seed-LM path and the corpus-scale join path.
 
 ## Hardware calibration (raw multiprocessing, no Spark)
 
-{low} vs {high} concurrent CPU-bound python processes on this VM:
+{any_rec['low_cores']} vs {any_rec['high_cores']} concurrent CPU-bound python processes on this VM:
 aggregate work rate {latest_hw[0]:.2f} -> {latest_hw[1]:.2f} units/s, i.e. the *box
 itself* scales at **{latest_hw[2]:.2f}** efficiency over this pair. (Past ~12
 concurrent processes the VM throttles: 8->32 procs gives only ~0.72 —

@@ -62,31 +62,3 @@ def test_join_mode_requires_lm_counts(spark):
     cfg = CrawlConfig(order=3, score_mode="join")
     with pytest.raises(ValueError, match="lm_counts"):
         run_crawl(spark, None, ["http://x/"], None, 1, cfg)
-
-
-def test_pivot_lookup_crawl_matches_broadcast(spark):
-    """Forcing the corpus-scale stats-lookup regime (join_pivot_min_stats=0:
-    the explode/join/pivot form that exchanges the stats dimension once per
-    round instead of 2n-1 times) must reproduce the broadcast-LM crawl
-    exactly — the lookup regime is invisible to crawl semantics."""
-    corpus = generate_corpus(n_pages=600, n_hosts=12, n_seeds=6, seed=11)
-    lm = LocalLM.from_texts([topic_corpus(11, 400)], order=3)
-    scorer = DocumentScorer(lm, "kneser-ney")
-    pages = pages_dataframe(spark, corpus)
-    cfg_b = CrawlConfig(order=3, per_host_quota=50, max_hops=10)
-    cfg_p = replace(cfg_b, score_mode="join", join_pivot_min_stats=0)
-
-    run_b = run_crawl(spark, pages, corpus.seeds, scorer, 3, cfg_b)
-    run_p = run_crawl(
-        spark, pages, corpus.seeds, scorer, 3, cfg_p,
-        lm_counts=_lm_counts_df(spark, lm),
-    )
-    assert _frontier_rows(run_b) == _frontier_rows(run_p)
-    for mb, mp in zip(run_b.metrics, run_p.metrics):
-        assert mb["admitted"] == mp["admitted"]
-        assert mb["urls_new"] == mp["urls_new"]
-        for k in ("perp_min", "perp_max", "perp_avg"):
-            if mb[k] is None:
-                assert mp[k] is None
-            else:
-                assert mp[k] == pytest.approx(mb[k], rel=1e-9), (k, mb[k], mp[k])

@@ -1,8 +1,9 @@
-"""Parity: the join-based corpus-scale scorers (Laplace, Stupid Backoff,
-Kneser-Ney for bigrams) must reproduce the reference-pinned LocalLM
-(mapbased/LaplaceSmoothedLM, lucenebased/StupidBackoffLM.score,
-lucenebased/KneserNeyLM.kn) on the same count tables — including the
-backoff/early-return branches exercised by unseen and OOV bigrams."""
+"""Parity: the join-based corpus-scale scorers (Laplace for bigrams; the
+order-n Stupid Backoff and Kneser-Ney at orders 2, 3 and 5) must reproduce
+the reference-pinned LocalLM (mapbased/LaplaceSmoothedLM,
+lucenebased/StupidBackoffLM.score, lucenebased/KneserNeyLM.kn) on the same
+count tables — including the backoff/early-return branches exercised by
+unseen and OOV n-grams — and pass arbitrary input rows through."""
 
 from __future__ import annotations
 
@@ -14,9 +15,9 @@ from pyspark.sql import functions as F
 from topicrawler_spark.lm.counting import (
     count_ngrams,
     kn_discounts_from_histogram,
-    score_kn_bigram_join,
+    score_kn_join,
     score_laplace_join,
-    score_stupid_backoff_bigram_join,
+    score_stupid_backoff_join,
     sum_ngrams_histogram,
 )
 from topicrawler_spark.lm.local import LocalLM
@@ -75,7 +76,7 @@ def test_stupid_backoff_join_parity(spark, built):
     lm, counts, cand = built
     got = {
         r["ngram"]: r["sb_log10"]
-        for r in score_stupid_backoff_bigram_join(cand, counts).collect()
+        for r in score_stupid_backoff_join(cand, counts, 2).collect()
     }
     assert got, "no candidates scored"
     for g, v in got.items():
@@ -156,8 +157,6 @@ def test_kn_join_order_n_parity(spark, order, mincount):
     """score_kn_join at n=3 (incl. a pruned table: nf==0 reset + pruned-nom
     early returns) and the production n=5 must match LocalLM.kneser_ney
     branch-for-branch."""
-    from topicrawler_spark.lm.counting import score_kn_join
-
     seqs = [t.split() for t in TEXTS * 2] + [
         "the cat sat on the mat quietly while dogs bark".split(),
         "a bird and a cat sat on a log".split(),
@@ -179,8 +178,6 @@ def test_kn_join_order_n_parity(spark, order, mincount):
 
 @pytest.mark.parametrize("order,mincount", [(3, 1), (3, 2), (5, 1)])
 def test_sb_join_order_n_parity(spark, order, mincount):
-    from topicrawler_spark.lm.counting import score_stupid_backoff_join
-
     seqs = [t.split() for t in TEXTS * 2] + [
         "the cat sat on the mat quietly while dogs bark".split(),
         "a bird and a cat sat on a log".split(),
@@ -198,25 +195,6 @@ def test_sb_join_order_n_parity(spark, order, mincount):
         want = lm.stupid_backoff_log10(g.split(" "))
         assert v == pytest.approx(want, rel=1e-9), (g, v, want)
     counts.unpersist()
-
-
-def test_general_join_scorers_match_bigram_twins(spark, built):
-    """At n=2 the general scorers must reproduce the dedicated bigram joins."""
-    from topicrawler_spark.lm.counting import score_kn_join, score_stupid_backoff_join
-
-    _, counts, cand = built
-    kn2 = {r["ngram"]: r["kn_log10"] for r in score_kn_bigram_join(cand, counts).collect()}
-    kng = {r["ngram"]: r["kn_log10"] for r in score_kn_join(cand, counts, 2).collect()}
-    assert kng == pytest.approx(kn2)
-    sb2 = {
-        r["ngram"]: r["sb_log10"]
-        for r in score_stupid_backoff_bigram_join(cand, counts).collect()
-    }
-    sbg = {
-        r["ngram"]: r["sb_log10"]
-        for r in score_stupid_backoff_join(cand, counts, 2).collect()
-    }
-    assert sbg == pytest.approx(sb2)
 
 
 def test_doc_perplexity_kn2_matches_local_lm(spark):
@@ -257,7 +235,7 @@ def test_kn_join_parity(spark, built):
     lm, counts, cand = built
     got = {
         r["ngram"]: r["kn_log10"]
-        for r in score_kn_bigram_join(cand, counts).collect()
+        for r in score_kn_join(cand, counts, 2).collect()
     }
     assert got, "no candidates scored"
     # the candidate set must exercise seen, unseen-but-in-vocab, and OOV paths
@@ -268,25 +246,29 @@ def test_kn_join_parity(spark, built):
 
 
 def test_join_scorers_null_out_wrong_order_ngrams(spark, built):
-    """Rows whose ngram does not have exactly `order` tokens must score NULL
-    (not a plausible backoff score from empty join keys) in both general
-    join scorers — the loud-failure guard for malformed input."""
-    from topicrawler_spark.lm.counting import score_kn_join, score_stupid_backoff_join
-
+    """Both general join scorers take arbitrary rows: every input row and
+    column comes back (duplicated ngrams score alike, extra columns are
+    carried), and a row whose ngram is null or does not have exactly
+    `order` tokens scores NULL (not a plausible backoff score from empty
+    join keys) — the loud-failure guard for malformed input."""
     _, counts, _ = built
-    mixed = spark.createDataFrame(
-        [("the cat",), ("cat",), ("the cat sat",), ("",)], "ngram string"
-    )
-    kn = {r["ngram"]: r["kn_log10"] for r in score_kn_join(mixed, counts, 2).collect()}
-    sb = {
-        r["ngram"]: r["sb_log10"]
-        for r in score_stupid_backoff_join(mixed, counts, 2).collect()
-    }
-    for got in (kn, sb):
-        assert got["the cat"] is not None
-        assert got["cat"] is None
-        assert got["the cat sat"] is None
-        assert got[""] is None
+    rows = [
+        (1, "the cat"), (2, "cat"), (3, "the cat sat"), (4, ""),
+        (5, "the cat"), (6, None), (7, "cat zzz"),
+    ]
+    mixed = spark.createDataFrame(rows, "id int, ngram string")
+    for df, col in (
+        (score_kn_join(mixed, counts, 2), "kn_log10"),
+        (score_stupid_backoff_join(mixed, counts, 2), "sb_log10"),
+    ):
+        assert df.columns == ["id", "ngram", col]
+        out = df.collect()
+        assert sorted((r["id"], r["ngram"]) for r in out) == rows
+        got = {r["id"]: r[col] for r in out}
+        assert got[1] is not None and got[7] is not None
+        assert got[1] == got[5]
+        for i in (2, 3, 4, 6):
+            assert got[i] is None, (col, rows[i - 1])
 
 
 @pytest.mark.parametrize("order", [3, 5])
@@ -322,39 +304,3 @@ def test_doc_perplexity_kn_order_matches_local_lm(spark, order):
         n, p = got[doc_id]
         assert n == len(ngrams), doc_id
         assert p == pytest.approx(perp, abs=2e-4), (doc_id, p, perp)
-
-
-@pytest.mark.parametrize("order", [2, 3, 5])
-def test_pivot_join_path_matches_join_per_key(spark, order):
-    """The single-exchange explode/join/pivot stats lookup
-    (``_join_stats_keys_pivot``, used by the per-round distinct-ngram
-    scoring path) must produce the exact kn_log10 of the join-per-key form
-    on the same candidates — including OOV, pruned, and rotated ngrams."""
-    from topicrawler_spark.lm.counting import (
-        count_ngrams,
-        kn_join_setup,
-        score_kn_join_with_stats,
-    )
-
-    seqs = [t.split() for t in TEXTS * 2] + [
-        "the cat sat on the mat quietly while dogs bark".split(),
-        "a bird and a cat sat on a log".split(),
-    ]
-    sentences = spark.createDataFrame([(s,) for s in seqs], "tokens array<string>")
-    counts = count_ngrams(sentences, order=order, mincount=1).cache()
-    stats, consts = kn_join_setup(counts, order)
-    cand = _order_n_candidates(spark, seqs, order)
-    legacy = {
-        r["ngram"]: r["kn_log10"]
-        for r in score_kn_join_with_stats(cand, stats, order, consts).collect()
-    }
-    pivot = {
-        r["ngram"]: r["kn_log10"]
-        for r in score_kn_join_with_stats(
-            cand, stats, order, consts, unique_input=True
-        ).collect()
-    }
-    assert len(pivot) == len(legacy) > 20
-    for g, v in legacy.items():
-        assert pivot[g] == pytest.approx(v, rel=1e-12, abs=1e-300), g
-    counts.unpersist()

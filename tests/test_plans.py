@@ -259,16 +259,18 @@ def test_scoring_stage_is_host_partitioned(spark):
 
 
 def test_pivot_stats_lookup_scans_dimension_once(spark):
-    """The corpus-scale stats lookup (explode/join/pivot) must reference the
-    stats dimension ONCE in the physical plan; the broadcast-size form pays
-    2n-1 separate joins (and therefore 2n-1 scans of the dimension). This is
-    the at-scale contract: the table that grows with the corpus crosses the
-    wire once per scoring call."""
+    """The join scorers' stats lookup (explode/join/pivot) must reference
+    the stats dimension ONCE in the physical plan, not once per backoff key
+    (2n-1): the table that grows with the corpus crosses the wire once per
+    scoring call. Holds for a prebuilt dimension and for ``score_kn_join``
+    over a non-unique input (the distinct-and-rejoin step keeps it)."""
     from pyspark.sql import functions as F
 
     from topicrawler_spark.lm.counting import (
+        build_kn_stats,
         count_ngrams,
         kn_join_setup,
+        score_kn_join,
         score_kn_join_with_stats,
     )
 
@@ -279,22 +281,28 @@ def test_pivot_stats_lookup_scans_dimension_once(spark):
     )
     counts = count_ngrams(sents, order=order)
     stats, consts = kn_join_setup(counts, order)
-    # parquet-backed dimension so scans are countable in the plan
+    # parquet-backed tables so scans are countable in the plan
     import tempfile
 
     d = tempfile.mkdtemp()
     stats.write.mode("overwrite").parquet(d + "/stats")
+    counts.write.mode("overwrite").parquet(d + "/counts")
     stats_pq = spark.read.parquet(d + "/stats")
+    counts_pq = spark.read.parquet(d + "/counts")
     cand = counts.filter(F.col("n") == order).select("ngram")
 
-    legacy = score_kn_join_with_stats(cand, stats_pq, order, consts)
-    pivot = score_kn_join_with_stats(
-        cand, stats_pq, order, consts, unique_input=True
+    scored = score_kn_join_with_stats(cand, stats_pq, order, consts)
+    assert _plan(scored).count(d + "/stats") == 1
+    # duplicated ngrams + a carried column; the dimension is derived from
+    # the counts table, so one lookup scans counts as often as one
+    # build_kn_stats plan does
+    dup = spark.createDataFrame(
+        [(i, g) for i, g in enumerate(["the cat sat", "a cat and", "the cat sat"])],
+        "id long, ngram string",
     )
-    n_scans_legacy = _plan(legacy).count(d + "/stats")
-    n_scans_pivot = _plan(pivot).count(d + "/stats")
-    assert n_scans_legacy == 2 * order - 1
-    assert n_scans_pivot == 1
+    per_dim = _plan(build_kn_stats(counts_pq)).count(d + "/counts")
+    assert per_dim >= 1
+    assert _plan(score_kn_join(dup, counts_pq, order)).count(d + "/counts") == per_dim
 
 
 def test_memory_mode_seen_set_is_checkpointed_leaves(spark):

@@ -47,11 +47,6 @@ class CrawlConfig:
     # above this seen-set size the per-round driver collect+rebroadcast of
     # the seen set costs more (serially!) than a parallel shuffle anti-join
     seen_broadcast_max: int = 50_000
-    # join-scoring stats-lookup regime threshold (stats-dimension rows above
-    # which the single-exchange explode/join/pivot lookup replaces the 2n-1
-    # broadcast-hash joins); None = build_join_scorer's default. 0 forces
-    # the pivot (corpus-scale) form — parity tests use that.
-    join_pivot_min_stats: int | None = None
     # memory-mode seen checkpoints are per-round SEGMENTS (only the new rows
     # materialize; the carried set is a union of leaves — the in-memory twin
     # of the store's append-only segments). Every N rounds the union is

@@ -96,9 +96,7 @@ def run_crawl(
             persisted = store.latest_lm_counts(spark)
             if persisted is not None:
                 lm_counts = persisted
-        join_scorer = build_join_scorer(
-            spark, lm_counts, cfg.order, pivot_min_stats=cfg.join_pivot_min_stats
-        )
+        join_scorer = build_join_scorer(spark, lm_counts, cfg.order)
     lm_counts_cur = lm_counts
 
     # localCheckpoint: materialize AND flatten the logical plan to a leaf —
@@ -414,10 +412,7 @@ def run_crawl(
                 _join_bg()
                 old_stats = join_scorer.stats if join_scorer is not None else None
                 lm_counts_cur = lm_refreshed
-                join_scorer = build_join_scorer(
-                    spark, lm_counts_cur, cfg.order,
-                    pivot_min_stats=cfg.join_pivot_min_stats,
-                )
+                join_scorer = build_join_scorer(spark, lm_counts_cur, cfg.order)
                 if old_stats is not None:
                     old_stats.unpersist()
                 ops = build_round_ops(cfg, scorer_bc, robots, join_scorer=join_scorer)

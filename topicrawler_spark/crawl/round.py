@@ -781,7 +781,7 @@ def run_round(
         # NOT cache `per` — it materializes exactly once inside `scored`'s
         # dedicated fill, after `with_ng` is already built (the driver fills
         # the two caches in dependency order; see RoundResult.fills).
-        from topicrawler_spark.lm.perplexity import join_perp_column, score_pages_join
+        from topicrawler_spark.lm.perplexity import score_pages_join
 
         with_ng = base_scored.withColumns(
             {
@@ -802,20 +802,11 @@ def run_round(
             ops.join_score,
         )
         per_side = F.broadcast(per) if small_round else per
-        # campaign-prebuilt perp tree (JoinScorer.perp_col) when available —
-        # rebuilding the identical Column tree per round is serial driver
-        # time; fall back for ad-hoc scorers constructed without it
-        perp_tree = ops.join_score.perp_col
-        if perp_tree is None:
-            perp_tree = join_perp_column(
-                F.col("text"),
-                F.col("_perp_s"),
-                F.col("_perp_n"),
-                ops.join_score.base,
-            )
         scored = (
             with_ng.join(per_side, "canon", "left")
-            .withColumn("perp", F.when(page_ok, perp_tree))
+            # campaign-prebuilt perp tree: rebuilding the identical Column
+            # tree per round is serial driver time
+            .withColumn("perp", F.when(page_ok, ops.join_score.perp_col))
             .drop("ngrams", "_perp_s", "_perp_n")
         )
     # the reference's perplexity report (min/max/avg over scored pages),

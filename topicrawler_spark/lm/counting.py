@@ -254,50 +254,6 @@ def score_laplace_join(
     return out.withColumn("log10p", log10p).drop("_g", "_c", "_h", "_hc", "_hist")
 
 
-def _bigram_side_tables(lm_counts: DataFrame):
-    """Per-word count/continuation dimensions derived from the count table:
-    c1/c2 (unigram counts), nf_tot (distinct successors of w), np_tot
-    (distinct predecessors of w)."""
-    uni = lm_counts.filter(F.col("n") == 1)
-    big = lm_counts.filter(F.col("n") == 2)
-    w_of = lambda i: F.split(F.col("ngram"), " ")[i]  # noqa: E731
-    nf = big.groupBy(w_of(0).alias("_w")).agg(F.count(F.lit(1)).alias("_nf"))
-    np_ = big.groupBy(w_of(1).alias("_w")).agg(F.count(F.lit(1)).alias("_np"))
-    return uni, big, nf, np_
-
-
-def score_stupid_backoff_bigram_join(
-    bigrams_df: DataFrame,
-    lm_counts: DataFrame,
-    discount: float = 0.4,
-    ngram_col: str = "ngram",
-) -> DataFrame:
-    """Join-based Stupid Backoff scoring of bigrams at order 2, mirroring
-    ``LocalLM.stupid_backoff`` (lucenebased/StupidBackoffLM.score) including
-    its early-return quirks: an OOV last word scores ud = discount/(U+1);
-    a seen bigram scores c12/c1; otherwise the unigram score c(w2)/U with
-    NO extra discount at the top order. Adds ``sb_log10``."""
-    uni, big, _nf, _np = _bigram_side_tables(lm_counts)
-    U = uni.count()
-    ud = discount / (U + 1.0)
-    toks = F.split(F.col(ngram_col), " ")
-    w1, w2 = toks[0], toks[1]
-    c12 = big.select(F.col("ngram").alias("_g12"), F.col("cnt").alias("_c12"))
-    c1 = uni.select(F.col("ngram").alias("_g1"), F.col("cnt").alias("_c1"))
-    c2 = uni.select(F.col("ngram").alias("_g2"), F.col("cnt").alias("_c2"))
-    out = (
-        bigrams_df.join(c12, F.col(ngram_col) == F.col("_g12"), "left")
-        .join(c1, w1 == F.col("_g1"), "left")
-        .join(c2, w2 == F.col("_g2"), "left")
-    )
-    score = (
-        F.when(F.col("_c2").isNull(), F.lit(ud))  # ends_with_oov
-        .when(F.col("_c12").isNotNull(), F.col("_c12") / F.col("_c1"))
-        .otherwise(F.col("_c2") / F.lit(float(U)))
-    )
-    return out.withColumn("sb_log10", F.log10(score)).drop("_g12", "_c12", "_g1", "_c1", "_g2", "_c2")
-
-
 def kn_discounts_from_histogram(N: list[list[int]], order: int, discount: float = -1.0) -> list[float]:
     """Per-order KN discounts D = N1/(N1+2*N2) with the reference's
     monotonicity fix-ups (lucenebased/KneserNeyLM discount estimation;
@@ -356,46 +312,28 @@ def _hist_suffix(toks: Column, n: int, j: int) -> Column:
     return F.array_join(F.slice(toks, n - j, j), " ")
 
 
-def _join_stats_keys(
-    ngrams_df: DataFrame,
-    stats: DataFrame,
-    keys: dict[str, Column],
-    cols: list[str],
-    dims: dict[str, DataFrame] | None = None,
-) -> DataFrame:
-    """Left-join the stats dimension once per key expression; joined columns
-    are prefixed ``_{tag}_``. All equi-joins on the ngram string (broadcast
-    or SMJ under AQE). ``dims`` (from ``build_stats_lookup``) supplies the
-    per-tag aliased dimension DataFrames prebuilt once per campaign —
-    rebuilding them per scoring call costs ~800 py4j round trips of serial
-    driver time per crawl round."""
-    out = ngrams_df
-    for tag, key_expr in keys.items():
-        dim = (
-            dims[tag]
-            if dims is not None
-            else stats.select(
-                F.col("ngram").alias(f"_key_{tag}"),
-                *[F.col(c).alias(f"_{tag}_{c}") for c in cols],
-            )
-        )
-        out = out.join(dim, key_expr == F.col(f"_key_{tag}"), "left").drop(f"_key_{tag}")
-    return out
+def _backoff_keys(toks: Column, n: int) -> dict[str, Column]:
+    """The 2n-1 stats keys a backoff recursion reads for an n-token ngram:
+    the suffixes ``s1..sn`` and the histories ``h1..h{n-1}``."""
+    keys = {f"s{j}": _suffix(toks, n, j) for j in range(1, n + 1)}
+    keys.update({f"h{j}": _hist_suffix(toks, n, j) for j in range(1, n)})
+    return keys
+
+
+KN_STAT_COLS = ["cnt", "nf_tot", "np_tot", "nfp_tot"]
 
 
 @dataclass
 class StatsLookup:
-    """Round-invariant pieces of the stats-dimension lookup, built once per
-    scoring campaign (``build_stats_lookup``). DataFrames and Columns are
-    immutable plan fragments — reusing them across rounds removes the
-    per-round py4j/analysis cost of rebuilding identical trees.
+    """The stats-dimension lookup as prebuilt plan fragments
+    (``build_stats_lookup``): ``probe_cols`` is the (ngram alias,
+    posexplode(keys)) select list, ``dim`` the aliased dimension, ``aggs``
+    the pivot hash-aggregate columns. DataFrames and Columns are immutable
+    plan fragments, so a crawl builds them once per scoring campaign
+    instead of paying the py4j/analysis cost of identical trees per round.
+    The lookup is the only carrier of its dimension: scoring takes a
+    lookup, never a stats DataFrame beside it."""
 
-    ``dims``: per-tag aliased dimension (join-per-key form).
-    ``probe_cols``: the (id alias, posexplode(keys)) select list (pivot form).
-    ``dim``: the single aliased dimension (pivot form).
-    ``aggs``: the pivot hash-aggregate columns (pivot form)."""
-
-    dims: dict[str, DataFrame]
     probe_cols: list[Column]
     dim: DataFrame
     aggs: list[Column]
@@ -408,18 +346,9 @@ def build_stats_lookup(
     cols: list[str],
     ngram_col: str = "ngram",
 ) -> StatsLookup:
-    """Prebuild every round-invariant fragment both stats-lookup forms use
-    (see ``StatsLookup``). The probe side still differs per call, but the
-    dimension aliases, posexplode array, and pivot agg trees are identical
-    every round."""
+    """Prebuild the lookup of ``cols`` of ``stats`` at every key expression
+    (see ``StatsLookup``); looked-up columns come out as ``_{tag}_{col}``."""
     tags = list(keys)
-    dims = {
-        tag: stats.select(
-            F.col("ngram").alias(f"_key_{tag}"),
-            *[F.col(c).alias(f"_{tag}_{c}") for c in cols],
-        )
-        for tag in tags
-    }
     probe_cols = [
         F.col(ngram_col).alias("_pg"),
         F.posexplode(F.array(*[keys[t] for t in tags])).alias("_ki", "_key"),
@@ -432,44 +361,42 @@ def build_stats_lookup(
         for i, t in enumerate(tags)
         for c in cols
     ]
-    return StatsLookup(
-        dims=dims, probe_cols=probe_cols, dim=dim, aggs=aggs, ngram_col=ngram_col
+    return StatsLookup(probe_cols=probe_cols, dim=dim, aggs=aggs, ngram_col=ngram_col)
+
+
+def score_unique(ngrams_df: DataFrame, lookup: StatsLookup, score: Column) -> DataFrame:
+    """Score ngrams whose ``lookup.ngram_col`` values are UNIQUE ->
+    ``(ngram_col, score)``: posexplode the 2n-1 key expressions into
+    (ngram, key-index) pairs, left-join the stats dimension ONCE, pivot the
+    hits back to one wide row per ngram via a hash aggregate, and project
+    ``score`` (an aliased Column over ``ngram_col`` and the ``_{tag}_{col}``
+    names) from it.
+
+    Why this shape: joining the dimension once per key exchanges (or
+    broadcast-builds) the stats table 2n-1 times per scoring call, none
+    reused because each join aliases it differently. This form exchanges
+    stats once and trades the rest for one shuffle of the exploded probe
+    rows ((2n-1)x the distinct-ngram count) plus one map-side-combinable
+    groupBy — the side that scales with the corpus crosses the wire once.
+    Other input columns are not carried; duplicate ngrams would collapse
+    (``_score_rows`` handles arbitrary input)."""
+    tagged = ngrams_df.select(*lookup.probe_cols)
+    hits = tagged.join(lookup.dim, "_key", "left")
+    return (
+        hits.groupBy("_pg")
+        .agg(*lookup.aggs)
+        .withColumnRenamed("_pg", lookup.ngram_col)
+        .select(lookup.ngram_col, score)
     )
 
 
-def _join_stats_keys_pivot(
-    ngrams_df: DataFrame,
-    stats: DataFrame,
-    keys: dict[str, Column],
-    cols: list[str],
-    ngram_col: str = "ngram",
-    lookup: StatsLookup | None = None,
-) -> DataFrame:
-    """Single-exchange twin of ``_join_stats_keys`` for inputs whose
-    ``ngram_col`` values are UNIQUE (the per-round distinct-ngram scoring
-    path): posexplode the 2n-1 key expressions into (row, key-index) pairs,
-    left-join the stats dimension ONCE, and pivot the hits back to one wide
-    row per input ngram via a hash aggregate.
-
-    Why: the join-per-key form exchanges (or broadcast-builds) the stats
-    table once PER KEY — 2n-1 exchanges of the BIG side per scoring call,
-    none reused because each join aliases the dimension differently. This
-    form exchanges stats once and trades the rest for one shuffle of the
-    exploded probe rows ((2n-1)x the distinct-ngram count, 4 stat columns
-    wide) plus one map-side-combinable groupBy — the side that scales with
-    the corpus crosses the wire once. Measured at local[2]-vs-local[8] this
-    also removes the concurrent broadcast-build pile-up that inflated
-    join-mode task-seconds with slot count.
-
-    Input rows beyond ``ngram_col`` are NOT carried (callers on the distinct
-    path have none); duplicate ngram values would collapse — callers must
-    guarantee uniqueness. ``lookup`` (a ``build_stats_lookup`` result)
-    supplies the round-invariant plan fragments prebuilt once per campaign."""
-    if lookup is None or lookup.ngram_col != ngram_col:
-        lookup = build_stats_lookup(stats, keys, cols, ngram_col)
-    tagged = ngrams_df.select(*lookup.probe_cols)
-    hits = tagged.join(lookup.dim, "_key", "left")
-    return hits.groupBy("_pg").agg(*lookup.aggs).withColumnRenamed("_pg", ngram_col)
+def _score_rows(ngrams_df: DataFrame, lookup: StatsLookup, score: Column) -> DataFrame:
+    """``score_unique`` for arbitrary input: score each distinct ngram once,
+    then left-join the score back, so duplicate ngrams, extra columns and
+    null ngrams (scored NULL) pass through with the input's rows."""
+    col = lookup.ngram_col
+    scored = score_unique(ngrams_df.select(col).distinct(), lookup, score)
+    return ngrams_df.join(scored, col, "left").select(*ngrams_df.columns, *scored.columns[1:])
 
 
 def score_stupid_backoff_join(
@@ -484,21 +411,18 @@ def score_stupid_backoff_join(
     branch-for-branch including its early-return quirks: an OOV last word
     scores ud = discount/(U+1); a miss while backing off at a middle order
     returns the previous level's score times one discount; a miss at the top
-    order returns the previous score undiscounted. Input rows must carry
-    ``order``-token ngrams; rows with any other token count score NULL
-    (loud, instead of a plausible-but-wrong backoff score from empty join
-    keys). 2n-1 equi-joins against the count table, no per-row Python.
-    Adds ``sb_log10``."""
+    order returns the previous score undiscounted. Rows whose ngram does not
+    carry ``order`` tokens score NULL (loud, instead of a
+    plausible-but-wrong backoff score from empty join keys). One stats
+    lookup against the count table, no per-row Python. Adds ``sb_log10``."""
     if order < 2:
         raise ValueError("order must be >= 2")
     n = order
-    counts_dim = lm_counts.select("ngram", "cnt")
     U = lm_counts.filter(F.col("n") == 1).count()
     ud = discount / (U + 1.0)
     toks = F.split(F.col(ngram_col), " ")
-    keys = {f"s{j}": _suffix(toks, n, j) for j in range(1, n + 1)}
-    keys.update({f"h{j}": _hist_suffix(toks, n, j) for j in range(1, n)})
-    out = _join_stats_keys(ngrams_df, counts_dim, keys, ["cnt"])
+    keys = _backoff_keys(toks, n)
+    lookup = build_stats_lookup(lm_counts, keys, ["cnt"], ngram_col)
 
     def c(tag: str) -> Column:
         return F.coalesce(F.col(f"_{tag}_cnt"), F.lit(0)).cast("double")
@@ -517,10 +441,8 @@ def score_stupid_backoff_join(
     result = nom / denom
     for cond, val in reversed(branches):
         result = F.when(cond, val).otherwise(result)
-    out = out.withColumn(
-        "sb_log10", F.when(F.size(toks) == n, F.log10(result))
-    )
-    return out.drop(*[f"_{tag}_cnt" for tag in keys])
+    sb_log10 = F.when(F.size(toks) == n, F.log10(result))
+    return _score_rows(ngrams_df, lookup, sb_log10.alias("sb_log10"))
 
 
 def score_kn_join(
@@ -542,11 +464,10 @@ def score_kn_join(
     The reference recursion's loop state (pkn, lp, nfh_prev, ch, sub_str)
     threads through column expressions; its early ``return``s become a
     first-match-wins CASE chain, so the whole scorer is one projection over
-    2n-1 equi-joins against the ``build_kn_stats`` dimension — no per-row
-    Python, no driver data besides the 12-number histogram. Input rows must
-    carry ``order``-token ngrams; rows with any other token count score NULL
-    (loud, instead of a plausible-but-wrong score from empty join keys).
-    Adds ``kn_log10``."""
+    one lookup of the ``build_kn_stats`` dimension — no per-row Python, no
+    driver data besides the 12-number histogram. Rows whose ngram does not
+    carry ``order`` tokens score NULL (loud, instead of a
+    plausible-but-wrong score from empty join keys). Adds ``kn_log10``."""
     stats, consts = kn_join_setup(lm_counts, order, discount)
     return score_kn_join_with_stats(ngrams_df, stats, order, consts, ngram_col)
 
@@ -570,19 +491,18 @@ def kn_join_setup(
 
 def kn_join_exprs(
     order: int, consts: dict, ngram_col: str = "ngram"
-) -> tuple[dict[str, Column], Column, list[str]]:
-    """Build the KN join keys and probability column ONCE — (join keys,
-    kn_log10 expression, helper columns to drop). Pure unresolved Column
-    trees over the fixed ``_{tag}_{col}`` names, so they are reusable across
-    any number of scoring calls/DataFrames: a crawl builds them once per
+) -> tuple[dict[str, Column], Column]:
+    """Build the KN stats keys and probability column ONCE — (keys,
+    ``kn_log10`` column aliased as such). Pure unresolved Column trees over
+    the fixed ``_{tag}_{col}`` names, so they are reusable across any
+    number of scoring calls/DataFrames: a crawl builds them once per
     campaign (JoinScorer) instead of paying the ~0.5-1 s of serial py4j
     Column construction per round that rebuilding them costs at order 3+."""
     n = order
     D, U, B, S1 = consts["D"], consts["U"], consts["B"], consts["S1"]
     ud = (1.0 / B) * (D[1] / U)
     toks = F.split(F.col(ngram_col), " ")
-    keys = {f"s{j}": _suffix(toks, n, j) for j in range(1, n + 1)}
-    keys.update({f"h{j}": _hist_suffix(toks, n, j) for j in range(1, n)})
+    keys = _backoff_keys(toks, n)
 
     def col0(tag: str, c: str) -> Column:
         return F.coalesce(F.col(f"_{tag}_{c}"), F.lit(0)).cast("double")
@@ -649,8 +569,7 @@ def kn_join_exprs(
         result = F.when(cond, val).otherwise(result)
     prob = F.least(F.greatest(result, punk), F.lit(1.0))
     kn_log10 = F.when(F.size(toks) == n, F.log10(prob))
-    added = [f"_{tag}_{c}" for tag in keys for c in ("cnt", "nf_tot", "np_tot", "nfp_tot")]
-    return keys, kn_log10, added
+    return keys, kn_log10.alias("kn_log10")
 
 
 def score_kn_join_with_stats(
@@ -659,89 +578,9 @@ def score_kn_join_with_stats(
     order: int,
     consts: dict,
     ngram_col: str = "ngram",
-    exprs: tuple[dict[str, Column], Column, list[str]] | None = None,
-    unique_input: bool = False,
-    lookup: StatsLookup | None = None,
 ) -> DataFrame:
-    """``score_kn_join`` against a prebuilt ``kn_join_setup`` dimension.
-    Pass ``exprs`` (a ``kn_join_exprs`` result) to reuse the Column trees
-    across calls — the per-round path does. ``unique_input=True`` (input is
-    a single-column DataFrame of DISTINCT ngrams — the per-round scoring
-    path) routes through the single-exchange explode/join/pivot form
-    (``_join_stats_keys_pivot``) instead of 2n-1 stats joins; results are
-    identical (parity-tested). ``lookup`` (a ``build_stats_lookup`` result)
-    reuses the round-invariant dimension/agg plan fragments — with exprs
-    and lookup supplied, a scoring call costs ~1/3 the py4j round trips."""
-    if exprs is None:
-        exprs = kn_join_exprs(order, consts, ngram_col)
-    keys, kn_log10, added = exprs
-    stat_cols = ["cnt", "nf_tot", "np_tot", "nfp_tot"]
-    if unique_input:
-        out = _join_stats_keys_pivot(
-            ngrams_df, stats, keys, stat_cols, ngram_col, lookup=lookup
-        )
-    else:
-        out = _join_stats_keys(
-            ngrams_df, stats, keys, stat_cols,
-            dims=lookup.dims if lookup is not None else None,
-        )
-    return out.withColumn("kn_log10", kn_log10).drop(*added)
-
-
-def score_kn_bigram_join(
-    bigrams_df: DataFrame,
-    lm_counts: DataFrame,
-    discount: float = -1.0,
-    ngram_col: str = "ngram",
-) -> DataFrame:
-    """Join-based interpolated modified Kneser-Ney scoring of bigrams at
-    order 2 — the corpus-scale twin of ``LocalLM.kneser_ney``
-    (lucenebased/KneserNeyLM.kn), branch-for-branch for n=2:
-
-    - unigram continuation p = np_tot(w2)/B, falling back to c(w2)/S1 then
-      1/U when w2 has no predecessors / no count
-    - top order p = max(c12-D2,0)/c1 + D2*max(nf_tot(w1),1)/c1 * p_cont
-      (the nf==0 pruning reset), degrading to the continuation prob when
-      c(w1)=0 and to punk when w2 is OOV
-    - punk = nf_tot(w1)/B * D1/U (ud when w1 has no successors), and the
-      final [punk, 1.0] clamp
-
-    Scalars (U, B, S1, D) are a 12-number histogram collect; everything
-    row-wise is broadcast-or-SMJ equi-joins on words. Adds ``kn_log10``."""
-    uni, big, nf, np_ = _bigram_side_tables(lm_counts)
-    N, S = sum_ngrams_histogram(lm_counts)
-    D = kn_discounts_from_histogram(N, 2, discount)
-    U, B, S1 = N[1][0], N[2][0], S[1]
-    D1, D2 = float(D[1]), float(D[2])
-    ud = (1.0 / B) * (D1 / U)
-    toks = F.split(F.col(ngram_col), " ")
-    w1, w2 = toks[0], toks[1]
-    c12 = big.select(F.col("ngram").alias("_g12"), F.col("cnt").alias("_c12"))
-    c1 = uni.select(F.col("ngram").alias("_g1"), F.col("cnt").alias("_c1"))
-    c2 = uni.select(F.col("ngram").alias("_g2"), F.col("cnt").alias("_c2"))
-    out = (
-        bigrams_df.join(c12, F.col(ngram_col) == F.col("_g12"), "left")
-        .join(c1, w1 == F.col("_g1"), "left")
-        .join(c2, w2 == F.col("_g2"), "left")
-        .join(nf.withColumnRenamed("_w", "_wnf"), w1 == F.col("_wnf"), "left")
-        .join(np_.withColumnRenamed("_w", "_wnp"), w2 == F.col("_wnp"), "left")
-    )
-    punk = F.when(F.col("_nf").isNull(), F.lit(ud)).otherwise(
-        (F.col("_nf") / F.lit(float(B))) * F.lit(D1 / U)
-    )
-    p_cont = F.col("_np") / F.lit(float(B))
-    nfh = F.coalesce(F.col("_nf"), F.lit(1)).cast("double")
-    p_top = F.greatest(F.coalesce(F.col("_c12"), F.lit(0)).cast("double") - F.lit(D2), F.lit(0.0)) / F.col("_c1")
-    pkn2 = p_top + (F.lit(D2) * nfh / F.col("_c1")) * p_cont
-    pkn = (
-        F.when(F.col("_c2").isNull(), punk)  # ends_with_oov
-        # np_total(w2)==0 is an EARLY return in the reference recursion:
-        # c(w2)/S1 (w2 never follows anything), skipping top-order entirely
-        .when(F.col("_np").isNull(), F.col("_c2") / F.lit(float(S1)))
-        .when(F.col("_c1").isNull(), p_cont)  # ch==0: return the continuation prob
-        .otherwise(pkn2)
-    )
-    prob = F.least(F.greatest(pkn, punk), F.lit(1.0))
-    return out.withColumn("kn_log10", F.log10(prob)).drop(
-        "_g12", "_c12", "_g1", "_c1", "_g2", "_c2", "_wnf", "_nf", "_wnp", "_np"
-    )
+    """``score_kn_join`` against a prebuilt ``kn_join_setup`` dimension:
+    arbitrary input rows, one lookup of ``stats`` per call."""
+    keys, kn_log10 = kn_join_exprs(order, consts, ngram_col)
+    lookup = build_stats_lookup(stats, keys, KN_STAT_COLS, ngram_col)
+    return _score_rows(ngrams_df, lookup, kn_log10)

@@ -189,81 +189,50 @@ class JoinScorer:
     uninitialized-field fallback included) are two tiny setup jobs."""
 
     def __init__(
-        self, stats, consts: dict, order: int, base: float, exprs=None,
-        pivot: bool = False, lookup=None, perp_col=None,
+        self, stats, order: int, base: float, lookup, kn_log10, perp_col
     ) -> None:
         self.stats = stats
-        self.consts = consts
         self.order = order
         self.base = base
-        # build_stats_lookup result: the round-invariant dimension/agg plan
-        # fragments of the stats lookup, prebuilt once per campaign —
-        # rebuilding them per round cost ~1,100 py4j round trips (~0.5 s of
-        # serial driver time) per crawl round, a fixed cost that does not
-        # shrink with executors.
+        # The Spark plan fragments below are round-invariant and built once
+        # per campaign: rebuilding them per round is serial driver py4j time
+        # (~1,100 round trips, ~0.5 s, for the lookup; ~0.5-1 s for the KN
+        # when-chain) that scales with rounds, not executors.
+        # build_stats_lookup result over ``stats``: scoring reads the
+        # dimension only through it (``stats`` is kept to unpersist)
         self.lookup = lookup
-        # prebuilt join_perp_column tree over the fixed (text, _perp_s,
-        # _perp_n) names — same reasoning (the tree is round-invariant)
+        # kn_join_exprs probability column
+        self.kn_log10 = kn_log10
+        # join_perp_column tree over the fixed (text, _perp_s, _perp_n) names
         self.perp_col = perp_col
-        # kn_join_exprs result, built once per campaign: rebuilding the KN
-        # when-chain Column trees is ~0.5-1 s of serial driver py4j time per
-        # scoring call — pure plan-construction latency that scales with
-        # rounds, not cores.
-        self.exprs = exprs
-        # stats-lookup regime (set by build_join_scorer from the dimension's
-        # row count): False = 2n-1 broadcast-hash joins of the stats table
-        # per scoring call (one codegen stage, zero extra shuffles — fastest
-        # while stats fits the broadcast threshold); True = the
-        # explode/join/pivot form (``_join_stats_keys_pivot``) that
-        # exchanges the stats table ONCE per call instead of 2n-1 times —
-        # the corpus-scale shape once the topic LM outgrows a broadcast.
-        self.pivot = pivot
 
 
-def build_join_scorer(
-    spark, lm_counts, order: int, discount: float = -1.0,
-    pivot_min_stats: int | None = None,
-) -> JoinScorer:
-    """``pivot_min_stats``: stats-dimension row count above which scoring
-    uses the single-exchange pivot lookup (default ~broadcast-threshold
-    rows); pass 0 to force it, a huge value to force the join-per-key form."""
-    from pyspark.sql import functions as F  # noqa: F401
+def build_join_scorer(spark, lm_counts, order: int, discount: float = -1.0) -> JoinScorer:
+    from pyspark.sql import functions as F
 
     from topicrawler_spark.lm.counting import (
+        KN_STAT_COLS,
+        build_stats_lookup,
         kn_join_exprs,
         kn_join_setup,
-        score_kn_join_with_stats,
+        score_unique,
     )
-    from topicrawler_spark.lm.counting import build_stats_lookup
     from topicrawler_spark.lm.ngrams import UNKNOWN_WORD
 
     stats, consts = kn_join_setup(lm_counts, order, discount)
     stats = stats.cache()
-    # one count on the (cached, campaign-lifetime) dimension: sizes the
-    # lookup regime, and doubles as the cache prefill so the first round
-    # never races an unfilled stats cache across its join branches
-    n_stats = stats.count()
-    if pivot_min_stats is None:
-        # ~10 MB broadcast threshold / ~100 B per stats row
-        pivot_min_stats = 100_000
-    pivot = n_stats >= pivot_min_stats
-    exprs = kn_join_exprs(order, consts)
-    lookup = build_stats_lookup(
-        stats, exprs[0], ["cnt", "nf_tot", "np_tot", "nfp_tot"]
-    )
+    # cache prefill: the dimension lives for the whole campaign, and the
+    # first round should scan it from memory, not race its fill
+    stats.count()
+    keys, kn_log10 = kn_join_exprs(order, consts)
+    lookup = build_stats_lookup(stats, keys, KN_STAT_COLS)
     unk = spark.createDataFrame([(" ".join([UNKNOWN_WORD] * order),)], "ngram string")
-    row = score_kn_join_with_stats(
-        unk, stats, order, consts, exprs=exprs, unique_input=pivot, lookup=lookup
-    ).collect()[0]
-    lp = row["kn_log10"]
+    lp = score_unique(unk, lookup, kn_log10).collect()[0]["kn_log10"]
     base = math.pow(10.0, -lp) if lp is not None and math.isfinite(lp) else 0.0
     perp_col = join_perp_column(
         F.col("text"), F.col("_perp_s"), F.col("_perp_n"), base
     )
-    return JoinScorer(
-        stats, consts, order, base, exprs=exprs, pivot=pivot,
-        lookup=lookup, perp_col=perp_col,
-    )
+    return JoinScorer(stats, order, base, lookup, kn_log10, perp_col)
 
 
 def score_pages_join(pages, js: JoinScorer, id_col: str = "canon", ngrams_col: str = "ngrams"):
@@ -275,14 +244,10 @@ def score_pages_join(pages, js: JoinScorer, id_col: str = "canon", ngrams_col: s
     ``join_perp_column``)."""
     from pyspark.sql import functions as F
 
-    from topicrawler_spark.lm.counting import score_kn_join_with_stats
+    from topicrawler_spark.lm.counting import score_unique
 
     expl = pages.select(F.col(id_col).alias("_pid"), F.explode(ngrams_col).alias("ngram"))
-    uniq = expl.select("ngram").distinct()
-    scored = score_kn_join_with_stats(
-        uniq, js.stats, js.order, js.consts, exprs=js.exprs, unique_input=js.pivot,
-        lookup=js.lookup,
-    ).select("ngram", "kn_log10")
+    scored = score_unique(expl.select("ngram").distinct(), js.lookup, js.kn_log10)
     return (
         expl.join(scored, "ngram")
         .groupBy("_pid")
