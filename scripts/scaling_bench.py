@@ -29,6 +29,7 @@ from __future__ import annotations
 import json
 import multiprocessing as mp
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -102,15 +103,22 @@ def _window_cal(rec: dict) -> float:
 
 
 def _headline(hist: list[dict]) -> dict:
-    """Pick the record with the highest measured raw efficiency.
+    """Pick the window with the best box calibration: the one whose hardware
+    scaled closest to linear while its legs ran.
 
-    Same logic as the per-leg min-wall rule, one level up: the shared host
-    only ever SUBTRACTS capacity, so every measured window is a lower bound
-    on the engine's scaling — the max across windows is the least-polluted
-    estimate, and it never flatters the engine (every window is the engine
-    doing the identical work). All windows are reported alongside.
+    Not the window with the best efficiency: for a RATIO host contention is
+    not one-sided — load landing mostly on the low-core legs inflates the
+    measured speedup, and a max across windows surfaces exactly those
+    windows. The max efficiency is reported only as a side figure.
     """
-    return max(hist, key=lambda r: r["efficiency"])
+    return max(hist, key=_window_cal)
+
+
+def _input_desc(rec: dict) -> str:
+    return (
+        f"seed=42, {rec['pages']} pages, {rec['seeds']} seeds, "
+        f"{rec['rounds']} rounds, per-host quota {rec['quota']}"
+    )
 
 
 def compose() -> str:
@@ -128,12 +136,29 @@ def compose() -> str:
     if not histories:
         raise SystemExit("no BENCH/results_*.json to compose from")
 
-    any_rec = next(iter(histories.values()))[-1]
-    latest_hw = any_rec["hw_before"]
+    heads = {mode: _headline(hist) for mode, hist in histories.items()}
+    # header sizes and calibration come from each section's headline window
+    inputs = {_input_desc(rec) for rec in heads.values()}
+    if len(inputs) == 1:
+        input_md = f"Same job, same deterministic input ({inputs.pop()})"
+    else:
+        input_md = "Same job per mode, deterministic inputs (" + "; ".join(
+            f"{MODE_LABEL.get(m, m)}: {_input_desc(rec)}" for m, rec in heads.items()
+        ) + ")"
+    calib_md = "\n".join(
+        f"- {MODE_LABEL.get(m, m)}, headline window: {rec['low_cores']} vs "
+        f"{rec['high_cores']} processes, aggregate work rate "
+        f"{rec['hw_before'][0]:.2f} -> {rec['hw_before'][1]:.2f} units/s before "
+        f"the legs and {rec['hw_after'][0]:.2f} -> {rec['hw_after'][1]:.2f} after, "
+        f"i.e. the *box itself* scales at **{_window_cal(rec):.2f}** efficiency "
+        f"({rec['hw_before'][2]:.2f} / {rec['hw_after'][2]:.2f})"
+        for m, rec in heads.items()
+    )
 
     sections = []
     for mode, hist in histories.items():
-        rec = _headline(hist)
+        rec = heads[mode]
+        best_eff = max(hist, key=lambda r: r["efficiency"])
         # each section's core pair comes from its own headline window
         low, high = rec["low_cores"], rec["high_cores"]
         core_ratio = high / low
@@ -152,16 +177,18 @@ def compose() -> str:
             for i, (wl, wh) in enumerate(zip(rec["walls_low"], rec["walls_high"]))
             if wh
         }
-        best_rep = max(rep_eff, key=rep_eff.get)
         label = MODE_LABEL.get(mode, mode)
         sec = f"""## Crawl-round scaling — {label} ({low} vs {high} cores = N vs 4N)
 
-Headline = the best of {len(hist)} recorded battery window(s) — the shared
-host only subtracts capacity, so each window under-measures the engine and
-the max is the least-polluted estimate (same reasoning as min-wall within a
-leg). Every window is listed in the history table below. Within the
-headline window: best of {rec['repeats']} interleaved runs per leg (all
-listed; the VM's run-to-run wall noise is +-30-40%).
+Headline = the cleanest hardware window of the {len(hist)} recorded: the one
+with the best box calibration (mean of the samples taken just before and
+after its legs, here {_window_cal(rec):.2f}). Host contention does not only
+subtract from a ratio — load on the low-core legs inflates the speedup — so
+the best efficiency across windows ({best_eff['efficiency']:.2f}, window
+{hist.index(best_eff) + 1}) is a side figure, not the headline. Every
+window is listed in the history table below. Within the headline window:
+best of {rec['repeats']} interleaved runs per leg (all listed; the VM's
+run-to-run wall noise is +-30-40%).
 
 | cores | crawl wall (s) | URLs expanded+scored/sec | all crawl walls (s) |
 |---|---|---|---|
@@ -172,11 +199,10 @@ listed; the VM's run-to-run wall noise is +-30-40%).
 - throughput speedup: {speedup:.2f}x
 - **scaling efficiency: {rec['efficiency']:.2f}** (target >= 0.8; ratio of
   min-walls across all repeats)
-- window-matched per-repeat efficiency: best {max(rep_eff.values()):.2f}
-  (repeat {best_rep}; all repeats: {", ".join(f"{rep_eff[i]:.2f}" for i in sorted(rep_eff))}) —
+- window-matched per-repeat efficiency: median {statistics.median(rep_eff.values()):.2f}
+  (all repeats: {", ".join(f"{rep_eff[i]:.2f}" for i in sorted(rep_eff))}) —
   each repeat's two legs run back-to-back, so their ratio differences out
-  the host drift that can separate the two min-wall legs by 30+ minutes;
-  same one-sided-noise logic as min-wall
+  the host drift that can separate the two min-wall legs by 30+ minutes
 - **engine efficiency relative to the hardware ceiling: {rec['sw_efficiency']:.2f}**
   (raw-multiprocessing speedup {rec['mode_hw_speedup']:.2f}x bracketing these
   legs — the shared host's deliverable scaling for ANY software during
@@ -245,19 +271,18 @@ Raw JSON ({mode}, headline window):
 
     md = f"""# BENCH/BASELINE — crawl-round scaling evidence
 
-Same job, same deterministic input (seed=42, {any_rec['pages']} pages,
-{any_rec['seeds']} seeds, {any_rec['rounds']} rounds, per-host quota
-{any_rec['quota']}), two parallelism levels — the sandbox rendition of the
+{input_md}, two parallelism levels — the sandbox rendition of the
 N vs 4N executor requirement from BASELINE.json. Both scoring regimes are
 batteried: the broadcast seed-LM path and the corpus-scale join path.
 
 ## Hardware calibration (raw multiprocessing, no Spark)
 
-{any_rec['low_cores']} vs {any_rec['high_cores']} concurrent CPU-bound python processes on this VM:
-aggregate work rate {latest_hw[0]:.2f} -> {latest_hw[1]:.2f} units/s, i.e. the *box
-itself* scales at **{latest_hw[2]:.2f}** efficiency over this pair. (Past ~12
-concurrent processes the VM throttles: 8->32 procs gives only ~0.72 —
-so the N-vs-4N pair is chosen inside the hardware's linear regime.)
+Concurrent CPU-bound python processes on this VM:
+
+{calib_md}
+
+(Past ~12 concurrent processes the VM throttles: 8->32 procs gives only
+~0.72 — so the N-vs-4N pair is chosen inside the hardware's linear regime.)
 
 Each battery spans 25-90 minutes on a shared host whose deliverable
 capacity drifts; calibration is sampled immediately before and after each

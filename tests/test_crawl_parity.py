@@ -182,27 +182,31 @@ def test_retry_parity_with_simulator(spark, corpus, scorer, tmp_path):
     assert engine_frontier == sim_frontier
 
 
-def test_distributed_budget_matches_driver_fast_path(spark, corpus, scorer, cfg):
-    """Forcing the fully-distributed budget regime (no driver delay dict, no
-    per-round host_fetched collect — quota/budget arithmetic as joins) must
-    produce the exact same crawl as the driver fast path."""
-    from dataclasses import replace
-
-    pages = pages_dataframe(spark, corpus)
-    fast = run_crawl(spark, pages, corpus.seeds, scorer, 3, cfg)
-    dist_cfg = replace(cfg, robots_collect_max_hosts=0)
-    dist = run_crawl(spark, pages, corpus.seeds, scorer, 3, dist_cfg)
-    key = lambda x: (x["canon"], x["directive"], x["precedence"], x["ord_r"], x["ord_k"])
-    assert sorted(map(key, fast.state.frontier.collect())) == sorted(
-        map(key, dist.state.frontier.collect())
-    )
-    assert {r["url_hash"] for r in fast.state.seen.collect()} == {
-        r["url_hash"] for r in dist.state.seen.collect()
-    }
-    # the budget/politeness metrics must agree too (same admitted counts)
-    assert [m.get("fetched") for m in fast.metrics] == [
-        m.get("fetched") for m in dist.metrics
+def test_binding_budget_resume_matches_simulator(spark, corpus, scorer, cfg, tmp_path):
+    """A lifetime budget below what the crawl would fetch retires hosts. A
+    crawl stopped after round 2 and resumed to the last round must fetch and
+    mark seen exactly what the simulator does: resume restores the per-host
+    fetch totals, so a retired host never regains a quota."""
+    c = replace(cfg, queue_total_budget=4)
+    sim = CrawlSimulator(corpus.pages, scorer, c).run(corpus.seeds, ROUNDS)
+    unbounded = CrawlSimulator(corpus.pages, scorer, cfg).run(corpus.seeds, ROUNDS)
+    # the budget binds after the stop
+    assert [x for x in sim.fetch_log if x[0] > 2] != [
+        x for x in unbounded.fetch_log if x[0] > 2
     ]
+    pages = pages_dataframe(spark, corpus)
+    ckpt = str(tmp_path / "ck")
+    run_crawl(spark, pages, corpus.seeds, scorer, 2, c, checkpoint_dir=ckpt)
+    run = run_crawl(spark, pages, corpus.seeds, scorer, ROUNDS, c, checkpoint_dir=ckpt)
+    assert [m["round"] for m in run.metrics] == list(range(3, ROUNDS + 1))
+    store = CheckpointStore(ckpt)
+    engine_log = [
+        (x["round"], x["host"], x["host_rank"], x["canon"])
+        for r in range(1, ROUNDS + 1)
+        for x in store.read(spark, r, "fetch_log").collect()
+    ]
+    assert sorted(engine_log) == sorted(sim.fetch_log)
+    assert {r["canon"] for r in run.state.seen.collect()} == sim.seen
 
 
 def test_seen_segment_compaction_matches_full_checkpoint(spark, corpus, scorer, cfg):

@@ -60,8 +60,8 @@ def test_parquet_filter_pushdown(spark):
 
 
 def test_quota_join_broadcasts(spark):
-    """The per-host quota/budget dimensions must broadcast, never shuffle the
-    frontier."""
+    """A host-keyed dimension joined under a broadcast hint never shuffles
+    the frontier side."""
     frontier = spark.range(0, 1000).select(
         (F.col("id") % 50).cast("string").alias("host"), F.col("id").alias("ord_k")
     )
@@ -134,7 +134,7 @@ def _mini_round(spark, by_host=False, **cfg_kw):
     pp = prepare_pages(pages, by_host=by_host).localCheckpoint(eager=True)
     return run_round(
         spark, state, pp, scorer_bc, robots, cfg,
-        frontier_size_hint=0, ops=ops, host_fetched_map={},
+        frontier_size_hint=0, ops=ops,
     )
 
 
@@ -174,6 +174,22 @@ def test_fetch_join_never_shuffles_page_store(spark):
             # left child subtree lines until the right child starts
             left = "\n".join(lines[i + 1 : i + 4])
             assert "Exchange" not in left.split("Sort")[0], left
+
+
+def test_small_round_budget_joins_without_broadcast(spark):
+    """Small rounds run with AQE off, where each broadcast is a job of its
+    own. The budget dimensions (quota from host_rules, fetched totals) join
+    the frontier as shuffled hash joins on host, and the per-host admission
+    window reuses the frontier's host exchange."""
+    _, result = _mini_round(spark)
+    admitted = result.cached[0]
+    plan = _plan(admitted, "simple")
+    assert "BroadcastExchange" not in plan
+    assert plan.count("ShuffledHashJoin [host") == 2
+    lines = plan.splitlines()
+    window = next(i for i, ln in enumerate(lines) if "Window [row_number()" in ln)
+    join = next(i for i, ln in enumerate(lines) if "ShuffledHashJoin" in ln)
+    assert not any("Exchange" in ln for ln in lines[window:join])
 
 
 def test_host_layout_store_scores_without_repartition(spark):
@@ -250,7 +266,7 @@ def test_scoring_stage_is_host_partitioned(spark):
     pp = prepare_pages(pages).localCheckpoint(eager=True)
     _, result = run_round(
         spark, state, pp, scorer_bc, robots, cfg,
-        frontier_size_hint=0, ops=ops, host_fetched_map={},
+        frontier_size_hint=0, ops=ops,
     )
     plan = _plan(result.results, "formatted")
     assert "ArrowEvalPython" in plan  # the scoring stage
@@ -329,3 +345,54 @@ def test_memory_mode_seen_set_is_checkpointed_leaves(spark):
     for leaf in leaves:
         assert leaf.getClass().getSimpleName() == "LogicalRDD"
         assert leaf.rdd().isCheckpointed()
+
+
+def _python_nodes(plan) -> list[str]:
+    """Python-evaluation nodes of a logical plan, not looking inside cached
+    relations (an ``InMemoryRelation`` is a leaf: it reads the cache)."""
+    name = plan.nodeName()
+    if name == "InMemoryRelation":
+        return []
+    found = [name] if name == "ArrowEvalPython" else []
+    children = plan.children()
+    for i in range(children.size()):
+        found += _python_nodes(children.apply(i))
+    return found
+
+
+def test_memory_mode_round_state_reads_round_caches(spark, monkeypatch):
+    """From round 2 on, the next state's host totals and frontier read the
+    round's cached Arrow pass instead of recomputing it: the carried
+    host_fetched leaf, repeated inside those plans, must still match the
+    caches built on top of it."""
+    from topicrawler_spark.crawl import driver
+    from topicrawler_spark.crawl.config import CrawlConfig
+    from topicrawler_spark.datagen import generate_corpus, pages_dataframe, topic_corpus
+    from topicrawler_spark.lm.local import LocalLM
+    from topicrawler_spark.lm.perplexity import DocumentScorer
+
+    python_nodes = {}
+    real_round = driver.run_round
+
+    def spy(*args, **kwargs):
+        new_state, result = real_round(*args, **kwargs)
+        python_nodes[new_state.round_no] = {
+            name: _python_nodes(df._jdf.queryExecution().optimizedPlan())
+            for name, df in (
+                ("host_fetched", new_state.host_fetched),
+                ("frontier", new_state.frontier),
+            )
+        }
+        return new_state, result
+
+    monkeypatch.setattr(driver, "run_round", spy)
+    corpus = generate_corpus(n_pages=120, n_hosts=5, n_seeds=3, seed=5)
+    lm = LocalLM.from_texts([topic_corpus(5, 60)], order=3)
+    run = driver.run_crawl(
+        spark, pages_dataframe(spark, corpus), corpus.seeds,
+        DocumentScorer(lm, "kneser-ney"), 3,
+        CrawlConfig(order=3, per_host_quota=5, max_hops=5),
+    )
+    assert run.state.round_no == 3 and sorted(python_nodes) == [1, 2, 3]
+    for r in (2, 3):
+        assert python_nodes[r] == {"host_fetched": [], "frontier": []}, r

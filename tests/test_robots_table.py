@@ -87,19 +87,18 @@ def robots_pages(spark):
 
 def test_build_robots_table(spark, robots_pages):
     cfg = CrawlConfig()
-    table = build_robots_table(spark, robots_pages, cfg)
-    rules = {r["host"]: r for r in table.rules.collect()}
+    rules = {r["host"]: r for r in build_robots_table(spark, robots_pages, cfg).collect()}
     # www canonicalizes away: the row must key by the apex host
     assert set(rules) == {"site-a.ex", "site-b.ex"}
     assert rules["site-a.ex"]["delay_ms"] == 2000
     assert rules["site-b.ex"]["disallows"] == ["/"]
     # no Crawl-delay on site-b: floors at min_delay_ms
-    assert table.delays == {"site-a.ex": 2000, "site-b.ex": cfg.min_delay_ms}
+    assert rules["site-b.ex"]["delay_ms"] == cfg.min_delay_ms
 
 
 def test_gate_by_robots_join(spark, robots_pages):
     cfg = CrawlConfig()
-    table = build_robots_table(spark, robots_pages, cfg)
+    rules = build_robots_table(spark, robots_pages, cfg)
     cands = spark.createDataFrame(
         [
             ("site-a.ex", "http://site-a.ex/private/x"),      # blocked
@@ -107,43 +106,22 @@ def test_gate_by_robots_join(spark, robots_pages):
             ("site-a.ex", "http://site-a.ex/open"),           # allowed
             ("site-b.ex", "http://site-b.ex/anything"),       # deny-all
             ("site-z.ex", "http://site-z.ex/x"),              # no rules row
+            ("site-a.ex", "http://site-a.ex"),                # bare host: path "/"
         ],
         "host string, canon string",
     )
-    for bcast in (True, False):
-        got = {r["canon"] for r in gate_by_robots(cands, table.rules, bcast=bcast).collect()}
+    for shuffle_hash in (True, False):
+        gated = gate_by_robots(cands, rules, shuffle_hash=shuffle_hash)
+        if shuffle_hash:
+            plan = gated._jdf.queryExecution().executedPlan().toString()
+            assert "ShuffledHashJoin" in plan and "BroadcastExchange" not in plan
+        got = {r["canon"] for r in gated.collect()}
         assert got == {
             "http://site-a.ex/private/ok/x",
             "http://site-a.ex/open",
             "http://site-z.ex/x",
-        }, bcast
-
-
-def test_udf_gate_matches_join_gate(spark, robots_pages):
-    """The small-regime python-broadcast gate and the join gate must agree
-    row-for-row (same longest-prefix semantics, two physical strategies)."""
-    from pyspark.sql import functions as F
-
-    from topicrawler_spark.crawl.robots import make_robots_allow_udf
-
-    cfg = CrawlConfig()
-    table = build_robots_table(spark, robots_pages, cfg)
-    assert table.rules_bc is not None
-    cands = spark.createDataFrame(
-        [
-            ("site-a.ex", "http://site-a.ex/private/x"),
-            ("site-a.ex", "http://site-a.ex/private/ok/x"),
-            ("site-a.ex", "http://site-a.ex/open"),
-            ("site-b.ex", "http://site-b.ex/anything"),
-            ("site-z.ex", "http://site-z.ex/x"),
-            ("site-a.ex", "http://site-a.ex"),
-        ],
-        "host string, canon string",
-    )
-    udf_gate = make_robots_allow_udf(table.rules_bc)
-    via_udf = {r["canon"] for r in cands.filter(udf_gate(F.col("host"), F.col("canon"))).collect()}
-    via_join = {r["canon"] for r in gate_by_robots(cands, table.rules, bcast=True).collect()}
-    assert via_udf == via_join
+            "http://site-a.ex",
+        }, shuffle_hash
 
 
 def test_same_host_duplicate_resolution(spark):
@@ -157,19 +135,11 @@ def test_same_host_duplicate_resolution(spark):
         ],
         "url string, html binary",
     )
-    table = build_robots_table(spark, pages, cfg)
-    rows = table.rules.collect()
+    rows = build_robots_table(spark, pages, cfg).collect()
     assert len(rows) == 1
     # canonical sources are http://dup.ex/robots.txt (apex) and
     # http://dup.ex/robots.txt (www stripped) -> equal; min keeps one row.
     assert rows[0]["host"] == "dup.ex"
-
-
-def test_distributed_delays_threshold(spark, robots_pages):
-    cfg = CrawlConfig()
-    table = build_robots_table(spark, robots_pages, cfg, collect_delays_max=1)
-    assert table.delays is None  # 2 hosts > threshold: driver dict disabled
-    assert table.rules.count() == 2
 
 
 def test_parse_reference_semantics():

@@ -117,11 +117,6 @@ class CrawlConfig:
     # statically-sized filter saturates at 10^9+ URLs and prunes nothing.
     # False pins the static n_shards/shard_bytes above (tests, parity runs).
     bloom_auto_size: bool = True
-    # above this robots-host count the driver stops collecting the per-host
-    # delay dict (and the per-round host_fetched totals): quota/budget
-    # arithmetic runs fully distributed as joins on host instead. At
-    # 10^7-10^8 hosts the collects would be a driver OOM / serial bottleneck.
-    robots_collect_max_hosts: int = 100_000
     # batch analogue of Heritrix's inactive-queue activation by best queue
     # precedence: only the N best hosts (by min precedence, then name) are
     # active per round; None = all hosts active

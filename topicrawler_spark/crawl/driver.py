@@ -73,13 +73,11 @@ def run_crawl(
     if cfg.schedule_robots_prereqs:
         # prereq mode: rules are crawl state (state.robots), discovered by
         # fetching /robots.txt prerequisites — no up-front parse
-        from topicrawler_spark.crawl.robots import HOST_RULES_SCHEMA, RobotsTable
+        from topicrawler_spark.crawl.robots import HOST_RULES_SCHEMA
 
-        robots = RobotsTable(spark.createDataFrame([], HOST_RULES_SCHEMA), None)
+        rules = spark.createDataFrame([], HOST_RULES_SCHEMA)
     else:
-        robots = build_robots_table(
-            spark, pages, cfg, collect_delays_max=cfg.robots_collect_max_hosts
-        )
+        rules = build_robots_table(spark, pages, cfg)
     from topicrawler_spark.crawl.round import build_round_ops, prepare_pages
 
     join_scorer = None
@@ -107,21 +105,9 @@ def run_crawl(
     # pass pages_prepared=True.
     if not pages_prepared:
         pages = prepare_pages(pages).localCheckpoint(eager=True)
-    ops = build_round_ops(cfg, scorer_bc, robots, join_scorer=join_scorer)
+    ops = build_round_ops(cfg, scorer_bc, join_scorer=join_scorer)
 
     all_metrics: list[dict] = []
-    # Driver-side budget fast path: only while the robots host count stayed
-    # below the collect threshold (robots.delays present). Past it the
-    # per-round host_fetched collect would itself be a driver bottleneck, so
-    # the budget arithmetic runs as joins inside run_round instead.
-    # On resume the persisted per-host fetched totals must seed the budget
-    # bookkeeping — an empty map would grant retired hosts a fresh quota.
-    distributed_budget = robots.delays is None
-    host_fetched_map: dict[str, int] | None = (
-        None
-        if distributed_budget
-        else {r["host"]: r["fetched"] for r in state.host_fetched.collect()}
-    )
 
     # previous round's fetched-page count — run_round's scoring-bin hint
     # (None on the first round: the frontier-size hint stands in there)
@@ -255,9 +241,8 @@ def run_crawl(
             # run_round is action-free, so its plan construction overlaps the
             # previous round's background commit
             state, result = run_round(
-                spark, state, pages, scorer_bc, robots, cfg,
-                frontier_size_hint=frontier_hint, ops=ops,
-                host_fetched_map=host_fetched_map, fetched_hint=last_fetched,
+                spark, state, pages, scorer_bc, rules, cfg,
+                frontier_size_hint=frontier_hint, ops=ops, fetched_hint=last_fetched,
             )
             t_plan = time.time() - t0
             # plan construction is done — sync with the previous round's
@@ -305,10 +290,6 @@ def run_crawl(
                     # the per-refresh lineage growth to a leaf
                     lm_refreshed = lm_refreshed.localCheckpoint(eager=True)
             if store is not None:
-                if not distributed_budget:
-                    host_fetched_map = {
-                        r["host"]: r["fetched"] for r in state.host_fetched.collect()
-                    }
                 # the manifest carries the resolved metrics
                 store.commit_round(state, result, lm_counts=lm_refreshed)
                 # re-read committed state: cuts the lazy lineage chain and makes
@@ -326,20 +307,11 @@ def run_crawl(
                 # caches, run in a BACKGROUND thread overlapping the next
                 # round's plan construction, joined before the next
                 # foreground action.
-                if distributed_budget:
-                    # never collect the (at-scale, host-cardinality) fetch
-                    # totals: materialize and cut lineage executor-side
-                    host_fetched = state.host_fetched.localCheckpoint(eager=True)
-                else:
-                    # threshold-gated small table: one task instead of a
-                    # shuffle-partition fan of micro-tasks (launch latency is
-                    # per-round driver time that does not shrink with cores)
-                    host_rows = [
-                        (r["host"], r["fetched"])
-                        for r in state.host_fetched.coalesce(1).collect()
-                    ]
-                    host_fetched_map = dict(host_rows)
-                    host_fetched = spark.createDataFrame(host_rows, HOST_SCHEMA)
+                # the empty union hides the aggregate's hash partitioning: a
+                # plan repeating such a leaf re-ids it and misses the caches
+                host_fetched = state.host_fetched.unionByName(
+                    spark.createDataFrame([], HOST_SCHEMA)
+                ).localCheckpoint(eager=True)
                 # lazy localCheckpoints: flatten the frontier's plan to a
                 # leaf; the background committer materializes it (the bloom's
                 # cogroup chain stays lazy — it materializes inside the next
@@ -415,7 +387,7 @@ def run_crawl(
                 join_scorer = build_join_scorer(spark, lm_counts_cur, cfg.order)
                 if old_stats is not None:
                     old_stats.unpersist()
-                ops = build_round_ops(cfg, scorer_bc, robots, join_scorer=join_scorer)
+                ops = build_round_ops(cfg, scorer_bc, join_scorer=join_scorer)
             # next round's scoring-bin hint: this round's fetched count is
             # the best action-free predictor of next round's page volume
             # (admission quotas move slowly round-to-round)

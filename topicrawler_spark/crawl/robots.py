@@ -7,9 +7,10 @@ enforces it in PreconditionEnforcer; crawl-delay feeds the politeness delay
 crawl, *in the executors* (an Arrow ``mapInPandas`` pass — at 10^7-10^8
 hosts a driver-side parse would be both an OOM and a multi-GB pickle
 broadcast), into a ``host_rules`` DataFrame keyed by canonical host. Gating
-is then a plain join against candidates — broadcast below the small-round
-threshold, shuffle join at scale — with the longest-prefix match evaluated
-as pure Catalyst array expressions (no Python in the per-candidate path).
+is then a plain join on host against candidates — a shuffled hash join in
+small rounds, the planner's choice at scale — with the longest-prefix match
+evaluated as pure Catalyst array expressions (no Python in the
+per-candidate path).
 
 Matching: directives of the most specific matching user-agent group
 (longest agent substring match, ``*`` fallback); allows/disallows by longest
@@ -21,8 +22,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
-
-import pandas as pd
 
 if TYPE_CHECKING:
     from pyspark.sql import Column, DataFrame, SparkSession
@@ -121,30 +120,6 @@ HOST_RULES_SCHEMA = (
 )
 
 
-@dataclass
-class RobotsTable:
-    """Per-crawl robots state.
-
-    ``rules`` is the distributed truth (cached; one row per canonical host).
-    ``delays`` is an optional driver-side {host: delay_ms} fast path that is
-    only materialized while the host count stays below a threshold — it lets
-    the driver fold per-host quotas and fetch budgets into one tiny
-    dimension without a per-round join. Past the threshold it is None and
-    every consumer uses the join path.
-
-    ``rules_bc`` (same threshold) is a ``pyspark.Broadcast`` of
-    {host: (allows, disallows)}: rules are crawl-CONSTANT, so the small
-    regime gates candidates with one python broadcast shipped once per
-    crawl instead of rebuilding a broadcast-exchange (execute + collect +
-    hash-build, a partly serial tail) inside every round's query. The join
-    path remains the at-scale truth and the two are parity-tested.
-    """
-
-    rules: "DataFrame"
-    delays: dict[str, int] | None
-    rules_bc: object | None = None
-
-
 def parse_robots_rows(robots_rows: "DataFrame", cfg) -> "DataFrame":
     """(url, html) robots rows -> (src, host, delay_ms, allows, disallows),
     parsed executor-side in one Arrow ``mapInPandas`` pass. ``src`` is the
@@ -190,13 +165,9 @@ def dedupe_host_rules(parsed: "DataFrame") -> "DataFrame":
     )
 
 
-def build_robots_table(
-    spark: "SparkSession",
-    pages: "DataFrame",
-    cfg,
-    collect_delays_max: int = 100_000,
-) -> RobotsTable:
-    """Parse all robots.txt rows into the host_rules DataFrame, executor-side.
+def build_robots_table(spark: "SparkSession", pages: "DataFrame", cfg) -> "DataFrame":
+    """Parse all robots.txt rows into the host_rules DataFrame (cached, one
+    row per canonical host), executor-side.
 
     Works on the raw pages table (url column) or the prepared store
     (canonical key); raw robots URLs are canonicalized first so both shapes
@@ -213,14 +184,8 @@ def build_robots_table(
         F.col(url_col).alias("url"), "html"
     )
     rules = dedupe_host_rules(parse_robots_rows(robots_rows, cfg)).cache()
-    head = rules.limit(collect_delays_max + 1).collect()
-    if len(head) > collect_delays_max:
-        return RobotsTable(rules, None, None)
-    delays = {r["host"]: r["delay_ms"] for r in head}
-    rules_bc = spark.sparkContext.broadcast(
-        {r["host"]: (list(r["allows"]), list(r["disallows"])) for r in head}
-    )
-    return RobotsTable(rules, delays, rules_bc)
+    rules.count()  # parse now: a per-crawl cost, not the first round's
+    return rules
 
 
 def robots_path_of(canon: "Column") -> "Column":
@@ -258,52 +223,19 @@ def robots_allowed_expr(
     )
 
 
-def make_robots_allow_udf(rules_bc):
-    """Small-regime gate: vectorized filter against the python-broadcast
-    rules dict (shipped once per crawl) — identical longest-prefix
-    semantics to ``robots_allowed_expr``; parity is pytest-pinned."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import BooleanType
-
-    @F.pandas_udf(BooleanType())
-    def robots_allows(host: pd.Series, canon: pd.Series) -> pd.Series:
-        table = rules_bc.value
-        out = []
-        for h, c in zip(host, canon):
-            e = table.get(h)
-            if e is None:
-                out.append(True)
-                continue
-            rest = c.split("://", 1)[-1]
-            path = "/" + rest.split("/", 1)[1] if "/" in rest else "/"
-            allows, disallows = e
-            ba = -1
-            for p in allows:
-                if p and path.startswith(p) and len(p) > ba:
-                    ba = len(p)
-            bd = -1
-            for p in disallows:
-                if p and path.startswith(p) and len(p) > bd:
-                    bd = len(p)
-            out.append(ba >= bd)
-        return pd.Series(out)
-
-    return robots_allows
-
-
 def gate_by_robots(
-    df: "DataFrame", rules: "DataFrame" | None, bcast: bool = False
+    df: "DataFrame", rules: "DataFrame" | None, shuffle_hash: bool = False
 ) -> "DataFrame":
     """Filter candidate rows (host, canon, ...) to robots-allowed ones via a
-    left join against host_rules. Broadcast under the small-round regime; a
-    shuffle join on host at scale (candidates are far wider than the rules
-    dimension, and host is already a grouping key downstream)."""
+    left join against host_rules on host. ``shuffle_hash`` forces a
+    shuffled hash join (the small-round regime runs with AQE off, where a
+    broadcast would be a job of its own); otherwise the planner picks."""
     from pyspark.sql import functions as F
 
     if rules is None:
         return df
     r = rules.select("host", "allows", "disallows")
-    j = df.join(F.broadcast(r) if bcast else r, "host", "left")
+    j = df.join(r.hint("shuffle_hash") if shuffle_hash else r, "host", "left")
     allowed = robots_allowed_expr(
         F.col("allows"), F.col("disallows"), robots_path_of(F.col("canon"))
     )

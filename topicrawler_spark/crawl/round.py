@@ -31,12 +31,7 @@ from topicrawler_spark.crawl.ranking import (
     per_host_top_k,
     zip_with_order,
 )
-from topicrawler_spark.crawl.robots import (
-    RobotsTable,
-    build_robots_table,
-    gate_by_robots,
-    make_robots_allow_udf,
-)
+from topicrawler_spark.crawl.robots import gate_by_robots
 from topicrawler_spark.functions.canonicalize import canonical_url, host_classkey, url_hash64
 from topicrawler_spark.functions.udfs import make_page_ngrams_udf, make_page_process_udf
 
@@ -91,9 +86,6 @@ class RoundOps:
     directive: Column  # priority mapping over via_perp
     precedence: Column
     page_udf: object  # html -> (text, outlinks, perp), one Arrow pass
-    # small-regime robots gate bound to the per-crawl python broadcast;
-    # None when the host count exceeds the collect threshold (join path)
-    robots_udf: object | None = None
     # corpus-scale relational scoring (cfg.score_mode == "join"): a
     # JoinScorer built once per crawl; page_udf then emits gated ngrams
     # instead of a perplexity and the round joins them against the count
@@ -101,12 +93,7 @@ class RoundOps:
     join_score: object | None = None
 
 
-def build_round_ops(
-    cfg: CrawlConfig,
-    scorer_bc,
-    robots: RobotsTable | None = None,
-    join_scorer=None,
-) -> RoundOps:
+def build_round_ops(cfg: CrawlConfig, scorer_bc, join_scorer=None) -> RoundOps:
     canon = F.col("canon")
     keep = (
         (F.col("hops") <= cfg.max_hops)
@@ -145,11 +132,6 @@ def build_round_ops(
             )
         ),
         join_score=join_scorer,
-        robots_udf=(
-            make_robots_allow_udf(robots.rules_bc)
-            if robots is not None and robots.rules_bc is not None and cfg.respect_robots
-            else None
-        ),
     )
 
 
@@ -435,11 +417,10 @@ def run_round(
     state: CrawlState,
     pages: DataFrame,
     scorer_bc,
-    robots: RobotsTable,
+    rules: DataFrame,
     cfg: CrawlConfig | None = None,
     frontier_size_hint: int | None = None,
     ops: RoundOps | None = None,
-    host_fetched_map: dict[str, int] | None = None,
     fetched_hint: int | None = None,
 ) -> tuple[CrawlState, RoundResult]:
     cfg = cfg or CrawlConfig()
@@ -538,82 +519,59 @@ def run_round(
         with_prereqs = state.frontier.unionByName(prereqs)
         known_rows = with_prereqs.join(known_hosts, "host", "left_semi")
         # admission-time robots gate; disallowed rows drop out of the crawl
-        allowed_known = gate_by_robots(known_rows, rules_df, bcast=small_round)
+        allowed_known = gate_by_robots(known_rows, rules_df, shuffle_hash=small_round)
         unknown_rows = with_prereqs.join(known_hosts, "host", "left_anti")
         frontier_eff = allowed_known.unionByName(unknown_rows)
         admissible = allowed_known.unionByName(unknown_rows.filter(is_robots_url))
     else:
-        rules_df = robots.rules
+        rules_df = rules
         prereqs = prereq_obs = None
         prereq_zip_cached = ()
         frontier_eff = state.frontier
         admissible = state.frontier
 
     # ---- 1. politeness admission (salted per-host top-k + queue budget) ----
-    delays = None if prereq_mode else robots.delays
     default_quota = cfg.host_quota(cfg.min_delay_ms)
-    if host_fetched_map is not None and delays is not None:
-        # per-round budget k = min(quota, total-budget - fetched) folded into
-        # ONE tiny driver-built dimension (the driver holds the fetched totals
-        # anyway) — one broadcast join instead of two. The lifetime budget
-        # clamps EVERY k, including hosts with no fetch history yet and the
-        # unknown-host default (a quota larger than the budget must not admit
-        # past the budget in a single round).
-        budget = cfg.queue_total_budget
-        k_rows = {}
-        for h, d in delays.items():
-            k_rows[h] = min(cfg.host_quota(d), budget)
-        for h, fetched in host_fetched_map.items():
-            q = k_rows.get(h, default_quota)
-            k_rows[h] = max(0, min(q, budget - fetched))
-        k_df = (
-            spark.createDataFrame(list(k_rows.items()), "host string, k long")
-            if k_rows
-            else spark.createDataFrame([], "host string, k long")
-        )
-        fr = admissible.join(F.broadcast(k_df), "host", "left").withColumn(
-            "k", F.coalesce("k", F.lit(min(default_quota, budget)).cast("long"))
-        )
+    # per-round budget k = min(quota, total budget - fetched): per-host
+    # quotas derive from the host_rules dimension (delay -> quota, as a
+    # column expression) and the running fetch totals, two joins on host.
+    # Small rounds run with AQE off, where each broadcast is a job of its
+    # own: shuffled hash joins there cost a stage each instead, and the
+    # frontier's host exchange is the one the per-host window needs anyway.
+    # At scale the planner (AQE) picks.
+    if cfg.per_host_quota is not None:
+        quota_expr = F.lit(cfg.per_host_quota)
     else:
-        # fully distributed budget arithmetic: per-host quotas derive from
-        # the host_rules dimension (delay -> quota, as a column expression)
-        # and the running fetch totals via two joins on host. Broadcast both
-        # dimensions under the small-round regime; at 10^7-10^8 hosts they
-        # exceed broadcast size and flip to shuffle joins (AQE-planned) —
-        # no driver-side dict at any point.
-        if cfg.per_host_quota is not None:
-            quota_expr = F.lit(cfg.per_host_quota)
-        else:
-            quota_expr = F.greatest(
-                F.lit(1),
-                F.floor(
-                    F.lit(cfg.round_ms) / F.greatest(F.col("delay_ms"), F.lit(1))
-                ).cast("int"),
-            )
-        rules_src = (
-            rules_df
-            if rules_df is not None
-            else spark.createDataFrame([], "host string, delay_ms int")
+        quota_expr = F.greatest(
+            F.lit(1),
+            F.floor(
+                F.lit(cfg.round_ms) / F.greatest(F.col("delay_ms"), F.lit(1))
+            ).cast("int"),
         )
-        quota_df = rules_src.select("host", quota_expr.alias("quota"))
-        q_side = F.broadcast(quota_df) if small_round else quota_df
-        hf_side = F.broadcast(state.host_fetched) if small_round else state.host_fetched
-        fr = (
-            admissible.join(q_side, "host", "left")
-            .join(hf_side, "host", "left")
-            .withColumn("quota", F.coalesce("quota", F.lit(default_quota)))
-            .withColumn("fetched", F.coalesce("fetched", F.lit(0)))
-            .withColumn(
-                "k",
-                F.greatest(
-                    F.lit(0),
-                    F.least(
-                        F.col("quota").cast("long"),
-                        F.lit(cfg.queue_total_budget) - F.col("fetched"),
-                    ),
+    rules_src = (
+        rules_df
+        if rules_df is not None
+        else spark.createDataFrame([], "host string, delay_ms int")
+    )
+    quota_df = rules_src.select("host", quota_expr.alias("quota"))
+    q_side = quota_df.hint("shuffle_hash") if small_round else quota_df
+    hf_side = state.host_fetched.hint("shuffle_hash") if small_round else state.host_fetched
+    fr = (
+        admissible.join(q_side, "host", "left")
+        .join(hf_side, "host", "left")
+        .withColumn("quota", F.coalesce("quota", F.lit(default_quota)))
+        .withColumn("fetched", F.coalesce("fetched", F.lit(0)))
+        .withColumn(
+            "k",
+            F.greatest(
+                F.lit(0),
+                F.least(
+                    F.col("quota").cast("long"),
+                    F.lit(cfg.queue_total_budget) - F.col("fetched"),
                 ),
-            )
+            ),
         )
+    )
     # precedence floor + retry snooze: a snoozed entry (not_before in the
     # future) is simply not admission-eligible this round — it stays in the
     # frontier via `remaining` without consuming its host's quota.
@@ -1032,13 +990,8 @@ def run_round(
         enq = new_unique
     elif not cfg.respect_robots:
         enq = new_unique
-    elif small_round and ops.robots_udf is not None:
-        # rules are crawl-constant: the python broadcast shipped once per
-        # crawl replaces a per-round broadcast-exchange build (execute +
-        # collect + hash-build — a partly serial tail in every round)
-        enq = new_unique.filter(ops.robots_udf(F.col("host"), F.col("canon")))
     else:
-        enq = gate_by_robots(new_unique, rules_df, bcast=small_round)
+        enq = gate_by_robots(new_unique, rules_df, shuffle_hash=small_round)
 
     # deterministic ordinal: dense rank over (parent ordinal, link index).
     # Tiny rounds: one global window (single reducer — trivial at this size)

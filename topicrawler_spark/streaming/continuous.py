@@ -34,7 +34,7 @@ def foreach_batch_crawl(
     Returns the StreamingQuery.
     """
     cfg = cfg or CrawlConfig()
-    robots = build_robots_table(spark, pages, cfg)
+    rules = build_robots_table(spark, pages, cfg)
     from topicrawler_spark.crawl.round import prepare_pages
 
     pages = prepare_pages(pages).persist()
@@ -50,7 +50,7 @@ def foreach_batch_crawl(
             state.round_no, batch_df, state.seen, state.host_fetched,
             state.bloom, state.robots,
         )
-        new_state, result = run_round(spark, state, pages, scorer_bc, robots, cfg)
+        new_state, result = run_round(spark, state, pages, scorer_bc, rules, cfg)
         store.commit_round(new_state, result)
 
     return (
