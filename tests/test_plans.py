@@ -7,7 +7,9 @@
 - small dimension joins broadcast
 - n-gram counting uses partial (map-side) aggregation
 - the heavy html column is pruned from post-extraction plans
-- the memory-mode seen set stays a union of checkpointed leaves
+- the memory-mode seen set stays a union of checkpointed leaves, and the
+  seed frontier is a checkpointed leaf
+- a round's plan construction stays within its py4j round-trip budget
 """
 
 from __future__ import annotations
@@ -345,6 +347,91 @@ def test_memory_mode_seen_set_is_checkpointed_leaves(spark):
     for leaf in leaves:
         assert leaf.getClass().getSimpleName() == "LogicalRDD"
         assert leaf.rdd().isCheckpointed()
+
+
+def _node_names(plan) -> list[str]:
+    children = plan.children()
+    return [plan.nodeName()] + [
+        name for i in range(children.size()) for name in _node_names(children.apply(i))
+    ]
+
+
+def _spy_rounds(monkeypatch, on_round):
+    """Patch ``driver.run_round`` to call ``on_round(state, run)`` with each
+    round's incoming state and a thunk that runs the real round."""
+    from topicrawler_spark.crawl import driver
+
+    real_round = driver.run_round
+
+    def spy(*args, **kwargs):
+        return on_round(args[1], lambda: real_round(*args, **kwargs))
+
+    monkeypatch.setattr(driver, "run_round", spy)
+    return driver
+
+
+def _small_memory_crawl(driver, spark, rounds: int):
+    from topicrawler_spark.crawl.config import CrawlConfig
+    from topicrawler_spark.datagen import generate_corpus, pages_dataframe, topic_corpus
+    from topicrawler_spark.lm.local import LocalLM
+    from topicrawler_spark.lm.perplexity import DocumentScorer
+
+    corpus = generate_corpus(n_pages=120, n_hosts=5, n_seeds=3, seed=5)
+    lm = LocalLM.from_texts([topic_corpus(5, 60)], order=3)
+    return driver.run_crawl(
+        spark, pages_dataframe(spark, corpus), corpus.seeds,
+        DocumentScorer(lm, "kneser-ney"), rounds,
+        CrawlConfig(order=3, per_host_quota=5, max_hops=5),
+    )
+
+
+def test_memory_mode_seed_frontier_is_checkpointed_leaf(spark, monkeypatch):
+    """Round 1 of an in-memory crawl reads the seed frontier from a
+    checkpointed leaf: its emptiness probe, admission and frontier commit do
+    not each recompute the seeds' canonicalization and dropDuplicates."""
+    plans = {}
+
+    def on_round(state, run):
+        plans[state.round_no] = _node_names(state.frontier._jdf.queryExecution().optimizedPlan())
+        return run()
+
+    run = _small_memory_crawl(_spy_rounds(monkeypatch, on_round), spark, 1)
+    assert run.state.round_no == 1 and list(plans) == [0]
+    assert not [n for n in plans[0] if "Aggregate" in n], plans[0]
+
+
+# py4j round trips of round 2's plan construction in this small memory-mode
+# crawl: 3,179 with PySpark's DataFrame debugging on, 1,608 with it off
+ROUND_PY4J_CALLS_MAX = 2_390
+
+
+def test_round_plan_py4j_round_trips(spark, monkeypatch):
+    """``run_round`` is action-free plan construction, serial driver time
+    paid in py4j round trips. PySpark's per-call origin capture
+    (``spark.python.sql.dataFrameDebugging.enabled``) doubles them; the
+    session turns it off."""
+    from py4j.java_gateway import GatewayClient
+
+    calls = {}
+    real_send = GatewayClient.send_command
+
+    def on_round(state, run):
+        n = [0]
+
+        def counting(self, *args, **kwargs):
+            n[0] += 1
+            return real_send(self, *args, **kwargs)
+
+        monkeypatch.setattr(GatewayClient, "send_command", counting)
+        try:
+            return run()
+        finally:
+            monkeypatch.setattr(GatewayClient, "send_command", real_send)
+            calls[state.round_no + 1] = n[0]
+
+    run = _small_memory_crawl(_spy_rounds(monkeypatch, on_round), spark, 2)
+    assert run.state.round_no == 2 and sorted(calls) == [1, 2]
+    assert calls[2] <= ROUND_PY4J_CALLS_MAX, calls
 
 
 def _python_nodes(plan) -> list[str]:

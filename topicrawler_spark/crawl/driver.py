@@ -65,9 +65,15 @@ def run_crawl(
             store.commit_round(state, None)
         else:
             # memory mode carries the seen set as a union of checkpointed
-            # leaves; make the seed set one too, or its canonicalization plan
-            # rides inside every round's seen scan until the first compaction
-            state = replace(state, seen=state.seen.localCheckpoint(eager=False))
+            # leaves. The seed frontier is one too (lazy: the first action
+            # fills it), and the seed seen set reads it: otherwise round 1's
+            # emptiness probe, admission and frontier commit each recompute
+            # the seeds' canonicalization and dropDuplicates, and the seen
+            # scans of later rounds carry that plan until the first compaction
+            frontier = state.frontier.localCheckpoint(eager=False)
+            state = replace(
+                state, frontier=frontier, seen=frontier.select("url_hash", "canon")
+            )
 
     scorer_bc = spark.sparkContext.broadcast(scorer)
     if cfg.schedule_robots_prereqs:

@@ -8,6 +8,8 @@ version, so for exact parity we ship a run-length-encoded dump of
 ``Character.getType`` for all codepoints 0..0x10FFFF, generated once with the
 local JDK (see ``scripts/gen_chartypes.md``). Lookup is O(log n) via bisect on
 ~3.9k runs; a 256-entry direct table accelerates ASCII/Latin-1.
+``char_class`` turns a set of types into a regex character class, so the
+segmenter classifies whole strings at ``re`` speed from the same table.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ from __future__ import annotations
 import bisect
 import gzip
 import os
+import re
 
 # Java Character type constants (java.lang.Character)
 UNASSIGNED = 0
@@ -87,48 +90,32 @@ def get_type(cp: int) -> int:
     return _lookup(cp)
 
 
-def is_digit(cp: int) -> bool:
-    """Java ``Character.isDigit``: type == DECIMAL_DIGIT_NUMBER."""
-    return get_type(cp) == DECIMAL_DIGIT_NUMBER
+def char_class(types, utf16: bool = False) -> str:
+    """Body of a regex character class (the text between ``[`` and ``]``)
+    matching every codepoint whose Java type is in ``types``.
 
-
-_np_table = None
-
-
-def types_array():
-    """Full 0..0x10FFFF -> Java char-type lookup table as a numpy uint8 array.
-
-    ~1 MB, built once per process; enables vectorized classification of whole
-    documents inside pandas UDFs instead of per-char Python calls.
+    With ``utf16`` the class describes a UTF-16 reader's view: an astral
+    character is two ``SURROGATE`` units, so it belongs to the class exactly
+    when ``SURROGATE`` is in ``types``. Built from the run table in one pass
+    over its ~3.9k runs.
     """
-    global _np_table
-    if _np_table is None:
-        import numpy as np
+    if not _starts:
+        _load()
+    top = 0xFFFF if utf16 else 0x10FFFF
+    ranges: list[list[int]] = []
 
-        if not _starts:
-            _load()
-        table = np.zeros(0x110000, dtype=np.uint8)
-        bounds = _starts + [0x110000]
-        for i, t in enumerate(_types):
-            table[bounds[i] : bounds[i + 1]] = t
-        _np_table = table
-    return _np_table
-
-
-def utf16_units(text: str) -> list[int]:
-    """The string as Java sees it: a sequence of UTF-16 code-unit values.
-
-    The reference tokenizers consume ``Reader.read()`` which yields UTF-16
-    units, not codepoints (``DiffTokenizer.java:67-77``); astral characters
-    appear as surrogate pairs classified as ``SURROGATE``. We reproduce that.
-    """
-    out: list[int] = []
-    for ch in text:
-        cp = ord(ch)
-        if cp > 0xFFFF:
-            cp -= 0x10000
-            out.append(0xD800 + (cp >> 10))
-            out.append(0xDC00 + (cp & 0x3FF))
+    def add(a: int, b: int) -> None:
+        if ranges and ranges[-1][1] + 1 == a:
+            ranges[-1][1] = b
         else:
-            out.append(cp)
-    return out
+            ranges.append([a, b])
+
+    bounds = _starts + [0x110000]
+    for k, t in enumerate(_types):
+        if t in types and bounds[k] <= top:
+            add(bounds[k], min(bounds[k + 1] - 1, top))
+    if utf16 and SURROGATE in types:
+        add(0x10000, 0x10FFFF)
+    return "".join(
+        re.escape(chr(a)) + ("-" + re.escape(chr(b)) if b > a else "") for a, b in ranges
+    )

@@ -18,6 +18,9 @@ reference.
 Deviation (documented): where several boundary entries match a suffix the
 reference picks an arbitrary HashSet-iteration winner; we deterministically
 pick the longest match.
+
+The splitter does not test every character: one compiled pattern finds the
+positions where a boundary entry ends, and the rules run only there.
 """
 
 from __future__ import annotations
@@ -25,10 +28,9 @@ from __future__ import annotations
 import os
 import re
 from dataclasses import dataclass, field
-from functools import lru_cache
 
 from topicrawler_spark import javachar as jc
-from topicrawler_spark.seg.segtypes import char_is_empty_space
+from topicrawler_spark.seg.segtypes import EMPTY_SPACE_CLASS
 
 # --- default boundary list ----------------------------------------------------
 
@@ -77,42 +79,14 @@ DEFAULT_POST_EXCEPTIONS: frozenset[str] = frozenset(
 
 # --- regex rules ----------------------------------------------------------------
 
-# Java \p{M} / \P{M}: build explicit char classes from the Java type tables
-# so plain `re` can evaluate them.
-_MARK_TYPES = (jc.NON_SPACING_MARK, jc.ENCLOSING_MARK, jc.COMBINING_SPACING_MARK)
-
-
-@lru_cache(maxsize=1)
-def _mark_class() -> str:
-    table = jc.types_array()
-    import numpy as np
-
-    is_mark = np.isin(table, _MARK_TYPES)
-    # find ranges
-    idx = np.nonzero(is_mark)[0]
-    if len(idx) == 0:
-        return ""
-    parts = []
-    start = prev = int(idx[0])
-    for v in idx[1:]:
-        v = int(v)
-        if v == prev + 1:
-            prev = v
-            continue
-        parts.append((start, prev))
-        start = prev = v
-    parts.append((start, prev))
-    cls = []
-    for a, b in parts:
-        if b > 0x10FFF0:
-            b = 0x10FFFF
-        cls.append(re.escape(chr(a)) + ("-" + re.escape(chr(b)) if b > a else ""))
-    return "".join(cls)
+# Java \p{M} / \P{M}: an explicit char class from the Java type tables so
+# plain `re` can evaluate them (each codepoint by its own type).
+_MARK_CLASS = jc.char_class({jc.NON_SPACING_MARK, jc.ENCLOSING_MARK, jc.COMBINING_SPACING_MARK})
 
 
 def _translate_java_regex(pattern: str) -> str:
     """Translate the \\p{M}/\\P{M} constructs used by the reference rules."""
-    mark = _mark_class()
+    mark = _MARK_CLASS
     pattern = pattern.replace(r"\p{M}", f"[{mark}]")
     pattern = pattern.replace(r"\P{M}", f"[^{mark}]")
     return pattern
@@ -140,21 +114,30 @@ DEFAULT_POST_RULES: list[tuple[str, bool]] = [
 
 # --- rule evaluation -------------------------------------------------------------
 
+# the look-ahead token: the EmptySpaceTokenizer's first segment of the next
+# 1000 characters (a longer run is cut there)
+_NEXT_TOKEN = re.compile(f"[{EMPTY_SPACE_CLASS}]+|[^{EMPTY_SPACE_CLASS}]+")
+_NEXT_TOKEN_WINDOW = 1000
+_EMPTY_SPACE_CHAR = re.compile(f"[{EMPTY_SPACE_CLASS}]")
 
-def _rtrim_empty_space(text: str) -> tuple[int, int]:
-    """(begin, end) of the last whitespace-delimited token, Java-style scan."""
-    end = len(text)
-    while end > 0 and char_is_empty_space(ord(text[end - 1])):
+
+def blank_empty_space(text: str) -> str:
+    """``text`` with every empty-space character replaced by a plain space:
+    same positions, so token bounds found in it index ``text`` itself."""
+    return _EMPTY_SPACE_CHAR.sub(" ", text)
+
+
+def token_span(blanked: str, start: int, end: int) -> tuple[int, int]:
+    """(begin, end) of the last whitespace-delimited token of
+    ``text[start:end]``, given ``blanked = blank_empty_space(text)``."""
+    while end > start and blanked[end - 1] == " ":
         end -= 1
-    begin = end
-    while begin > 0 and not char_is_empty_space(ord(text[begin - 1])):
-        begin -= 1
-    return begin, end
+    return max(blanked.rfind(" ", start, end) + 1, start), end
 
 
-def last_token(text: str) -> str:
-    b, e = _rtrim_empty_space(text)
-    return text[b:e]
+def _rules_hold(rules: list[tuple[re.Pattern, bool]], token: str) -> bool:
+    """The AND of the decisions of every rule that fully matches ``token``."""
+    return all(decision for pat, decision in rules if pat.fullmatch(token))
 
 
 @dataclass
@@ -167,58 +150,65 @@ class RuleSet:
     post_rules: list = field(default_factory=lambda: list(DEFAULT_POST_RULES))
 
     def __post_init__(self) -> None:
-        self._max_boundary_len = max((len(b) for b in self.boundaries), default=0)
-        # index boundaries by their final character for O(1) rejection of the
-        # overwhelmingly common non-boundary positions
+        # boundaries by their final character, longest first
         by_last: dict[str, list[str]] = {}
         for b in self.boundaries:
             by_last.setdefault(b[-1], []).append(b)
         for v in by_last.values():
             v.sort(key=len, reverse=True)
         self._boundaries_by_last = by_last
+        # every position where some boundary entry ends: the final character,
+        # then a look-behind for each entry ending in it
+        self._boundary_end = re.compile(
+            "|".join(
+                re.escape(c) + "(?:" + "|".join(f"(?<={re.escape(b)})" for b in bs) + ")"
+                for c, bs in sorted(by_last.items())
+            )
+            or "(?!)"
+        )
         self._pre_compiled = _compile_rules(self.pre_rules)
         self._post_compiled = _compile_rules(self.post_rules)
 
     # boundary list -----------------------------------------------------
 
-    def suffix_as_boundary(self, text: str) -> str | None:
-        """Longest boundary entry that is a suffix of ``text`` (None if none)."""
-        if not text:
-            return None
-        cands = self._boundaries_by_last.get(text[-1])
-        if not cands:
-            return None
-        for b in cands:
-            if text.endswith(b):
+    def boundary_ends(self, text: str, end: int) -> list[int]:
+        """Sorted positions ``i <= end`` where a boundary entry ends."""
+        return [m.end() for m in self._boundary_end.finditer(text, 0, end)]
+
+    def suffix_as_boundary(self, text: str, start: int, end: int) -> str | None:
+        """Longest boundary entry ending at ``end`` and starting at or after
+        ``start`` (None if none)."""
+        for b in self._boundaries_by_last.get(text[end - 1], ()):
+            if end - len(b) >= start and text.startswith(b, end - len(b)):
                 return b
         return None
 
-    # lookback ----------------------------------------------------------
+    # the RuleSplitter decision ------------------------------------------
 
-    def pre_list_complete(self, text_with_boundary: str) -> bool:
-        return last_token(text_with_boundary) not in self.pre_exceptions
-
-    def pre_rules_complete(self, text_before_boundary: str) -> bool:
-        if not text_before_boundary:
-            return True
-        tok = last_token(text_before_boundary)
-        result = True
-        for pat, decision in self._pre_compiled:
-            if pat.fullmatch(tok):
-                result = result and decision
-        return result
-
-    # lookahead -----------------------------------------------------------
-
-    def post_list_complete(self, next_token: str) -> bool:
-        return next_token not in self.post_exceptions
-
-    def post_rules_complete(self, next_token: str) -> bool:
-        result = True
-        for pat, decision in self._post_compiled:
-            if pat.fullmatch(next_token):
-                result = result and decision
-        return result
+    def splits_at(self, text: str, blanked: str, start: int, end: int) -> bool:
+        """Whether the sentence that starts at ``start`` ends at ``end``
+        (``RuleSplitter.java:60-95``): a boundary entry ends there; the last
+        token, boundary included, is not a pre-boundary exception; the
+        pre-boundary rules accept the last token before the boundary; and
+        the next approximate token is neither a post-boundary exception nor
+        refused by the post-boundary rules. ``blanked`` is
+        ``blank_empty_space(text)``."""
+        suffix = self.suffix_as_boundary(text, start, end)
+        if suffix is None:
+            return False
+        b, e = token_span(blanked, start, end)
+        if text[b:e] in self.pre_exceptions:
+            return False
+        before = end - len(suffix)
+        if before > start:
+            b, e = token_span(blanked, start, before)
+            if not _rules_hold(self._pre_compiled, text[b:e]):
+                return False
+        if end < len(text):
+            nxt = _NEXT_TOKEN.match(text, end, end + _NEXT_TOKEN_WINDOW).group()
+            if nxt in self.post_exceptions or not _rules_hold(self._post_compiled, nxt):
+                return False
+        return True
 
     # loading external rule files (reference file format) -------------------
 

@@ -4,6 +4,10 @@ Each token type owns a set of allowed Java char types; a segment is
 classified as the *most specific* token type whose set covers all char types
 seen in the segment (minimal |allowed| - |overlap|, first declared wins on
 ties) — re-derived from ``SegmentType.infer`` (SegmentType.java:156-174).
+
+The type sets are unions of six disjoint groups (upper, lower, number,
+punctuation, empty space, other), so a segment's type only depends on which
+groups it touches; the tokenizers read that off regex classes built here.
 """
 
 from __future__ import annotations
@@ -26,9 +30,9 @@ CHARTYPES = frozenset(
     }
 )
 
-_LETTERS = frozenset(
-    {jc.UPPERCASE_LETTER, jc.LOWERCASE_LETTER, jc.TITLECASE_LETTER, jc.MODIFIER_LETTER, jc.OTHER_LETTER}
-)
+_UPPER = frozenset({jc.UPPERCASE_LETTER, jc.TITLECASE_LETTER})
+_LOWER = frozenset({jc.LOWERCASE_LETTER, jc.MODIFIER_LETTER, jc.OTHER_LETTER})
+_LETTERS = _UPPER | _LOWER
 _NUMBERS = frozenset({jc.DECIMAL_DIGIT_NUMBER, jc.LETTER_NUMBER, jc.OTHER_NUMBER})
 _PUNCT = frozenset(
     {
@@ -76,11 +80,8 @@ TOKEN_TYPE_SETS: list[tuple[SegmentType, frozenset[int]]] = [
     (SegmentType.WORD, _LETTERS),
     (SegmentType.WORD_WITH_NUMBER, _LETTERS | _NUMBERS),
     (SegmentType.NUMBER, _NUMBERS),
-    (SegmentType.WORD_UPPERCASE, frozenset({jc.UPPERCASE_LETTER, jc.TITLECASE_LETTER})),
-    (
-        SegmentType.WORD_LOWERCASE,
-        frozenset({jc.LOWERCASE_LETTER, jc.MODIFIER_LETTER, jc.OTHER_LETTER}),
-    ),
+    (SegmentType.WORD_UPPERCASE, _UPPER),
+    (SegmentType.WORD_LOWERCASE, _LOWER),
     (SegmentType.PUNCTUATION, _PUNCT),
     (SegmentType.EMPTY_SPACE, _EMPTY_SPACE),
     (SegmentType.NON_WORD, CHARTYPES - _LETTERS),
@@ -112,14 +113,16 @@ def infer_type(char_types: set[int] | frozenset[int]) -> SegmentType:
     return best
 
 
-def char_type_is_empty_space(t: int) -> bool:
-    return t in _EMPTY_SPACE
-
-
-def char_is_empty_space(cp: int) -> bool:
-    return jc.get_type(cp) in _EMPTY_SPACE
-
-
-def char_is_line_separator(cp: int) -> bool:
-    """\\n, \\r, \\f, or Unicode LINE_SEPARATOR (SegmentationUtils semantics)."""
-    return cp in (10, 13, 12) or jc.get_type(cp) == jc.LINE_SEPARATOR
+# Regex class bodies for the tokenizers, generated from the Java type table.
+# A UTF-16 reader sees an astral character as two SURROGATE units, so these
+# put every astral character with SURROGATE (no astral codepoint is empty
+# space or a line separator by its own type either).
+EMPTY_SPACE_CLASS = jc.char_class(_EMPTY_SPACE, utf16=True)
+WORD_CHAR_CLASS = jc.char_class(_LETTERS | _NUMBERS, utf16=True)
+LETTER_CLASS = jc.char_class(_LETTERS, utf16=True)
+UPPER_CLASS = jc.char_class(_UPPER, utf16=True)
+LOWER_CLASS = jc.char_class(_LOWER, utf16=True)
+NUMBER_CLASS = jc.char_class(_NUMBERS, utf16=True)
+PUNCT_CLASS = jc.char_class(_PUNCT, utf16=True)
+# SegmentationUtils' line separators: \n, \r, \f and the LINE_SEPARATOR type
+LINE_SEPARATOR_CLASS = "\n\r\f" + jc.char_class({jc.LINE_SEPARATOR})

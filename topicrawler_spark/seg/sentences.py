@@ -14,18 +14,21 @@ from __future__ import annotations
 
 import re
 
-from topicrawler_spark.seg.rules import RuleSet, get_ruleset
-from topicrawler_spark.seg.segtypes import (
-    SegmentType,
-    char_is_empty_space,
-    char_is_line_separator,
-)
-from topicrawler_spark.seg.tokenizer import diff_tokenize, empty_space_tokenize
+from topicrawler_spark.seg.rules import RuleSet, blank_empty_space, get_ruleset
+from topicrawler_spark.seg.segtypes import LINE_SEPARATOR_CLASS, SegmentType
+from topicrawler_spark.seg.tokenizer import word_count_and_readable
 
-# lt.utilities StringUtils: [\s ]+ with Java \s (ASCII)
-_EMPTYSPACE_RUN = re.compile("[ \\t\\n\\x0b\\f\\r ]+")
-_EMPTYSPACE_LEAD = re.compile("^[ \\t\\n\\x0b\\f\\r ]+")
-_EMPTYSPACE_TRAIL = re.compile("[ \\t\\n\\x0b\\f\\r ]+$")
+# lt.utilities StringUtils: [\s\u00a0]+ with Java \s (ASCII)
+_EMPTYSPACE_RUN = re.compile("[ \\t\\n\\x0b\\f\\r\xa0]+")
+_EMPTYSPACE_LEAD = re.compile("^[ \\t\\n\\x0b\\f\\r\xa0]+")
+_EMPTYSPACE_TRAIL = re.compile("[ \\t\\n\\x0b\\f\\r\xa0]+$")
+# text that whitespace collapsing leaves as it is and in which the rule
+# splitter starts no empty-space segment: single inner spaces only, no line
+# separator, no NUL
+_PLAIN = re.compile(
+    f"[^ \\t\\x0b\\x00\xa0{LINE_SEPARATOR_CLASS}]+(?: [^ \\t\\x0b\\x00\xa0{LINE_SEPARATOR_CLASS}]+)*"
+)
+_LINE_RUN = re.compile(f"([{LINE_SEPARATOR_CLASS}]+)|[^{LINE_SEPARATOR_CLASS}]+")
 
 
 def trim_and_replace_emptyspace(text: str, replacement: str = " ") -> str:
@@ -37,88 +40,50 @@ def trim_and_replace_emptyspace(text: str, replacement: str = " ") -> str:
 def line_split(text: str) -> list[tuple[str, SegmentType]]:
     """Alternating runs of line-separators (EMPTY_SPACE) and line content
     (SENTENCE) — ``LineSplitter.java:35-73``."""
-    if not text:
-        return []
-    out: list[tuple[str, SegmentType]] = []
-    start = 0
-    cur_is_nl = char_is_line_separator(ord(text[0]))
-    for i in range(1, len(text)):
-        is_nl = char_is_line_separator(ord(text[i]))
-        if is_nl != cur_is_nl:
-            out.append((text[start:i], SegmentType.EMPTY_SPACE if cur_is_nl else SegmentType.SENTENCE))
-            start = i
-            cur_is_nl = is_nl
-    out.append((text[start:], SegmentType.EMPTY_SPACE if cur_is_nl else SegmentType.SENTENCE))
-    return out
+    return [
+        (m.group(), SegmentType.EMPTY_SPACE if m.lastindex else SegmentType.SENTENCE)
+        for m in _LINE_RUN.finditer(text)
+    ]
 
 
 def rule_split(text: str, rules: RuleSet | str = "default") -> list[tuple[str, SegmentType]]:
     """Boundary-rule sentence splitting — ``RuleSplitter.java:43-115``.
 
-    After each appended character, if the accumulated text ends with a
-    boundary entry AND the look-back checks (abbreviation list on the last
-    token incl. boundary; regex rules on the text before the boundary) AND
-    the look-ahead checks (next approximate token not in the continuation
-    list; regex rules) all pass, the sentence ends (boundary included).
-    A NUL character terminates splitting, like the reference's read loop.
+    A sentence ends after the first boundary entry at which the rules
+    accept a split (``RuleSet.splits_at``), boundary included. Only the
+    positions where a boundary entry ends are tested. A segment that starts
+    with a line separator is EMPTY_SPACE and also ends where the run of line
+    separators does. A NUL character terminates splitting, like the
+    reference's read loop.
     """
     if isinstance(rules, str):
         rules = get_ruleset(rules)
     nul = text.find("\x00")
     if nul >= 0:
         text = text[:nul]
-    out: list[tuple[str, SegmentType]] = []
     n = len(text)
-    i = 0
-    max_b = rules._max_boundary_len
-    while i < n:
-        start = i
-        first_is_newline = char_is_line_separator(ord(text[i]))
-        is_empty = first_is_newline
-        end = None
-        while i < n:
-            ch = text[i]
-            i += 1
-            is_empty = is_empty and char_is_empty_space(ord(ch))
-            # boundary suffix check on a bounded window (the reference caps
-            # the suffix window at 100 chars; entries are far shorter)
-            lo = max(start, i - max_b)
-            suffix = rules.suffix_as_boundary(text[lo:i])
-            if suffix is not None:
-                seg = text[start:i]
-                if rules.pre_list_complete(seg) and rules.pre_rules_complete(
-                    seg[: len(seg) - len(suffix)]
-                ):
-                    nxt = _next_approximate_token(text, i)
-                    if (
-                        nxt is None
-                        or (
-                            rules.post_list_complete(nxt)
-                            and rules.post_rules_complete(nxt)
-                        )
-                    ):
-                        end = i
-                        break
-            if is_empty and i < n and not char_is_line_separator(ord(text[i])):
+    ends = rules.boundary_ends(text, n)
+    blanked = blank_empty_space(text) if ends else text
+    out: list[tuple[str, SegmentType]] = []
+    k = 0
+    start = 0
+    while start < n:
+        run = _LINE_RUN.match(text, start)
+        if run.lastindex:
+            limit, kind = run.end(), SegmentType.EMPTY_SPACE
+        else:
+            limit, kind = n, SegmentType.SENTENCE
+        # every candidate before ``start`` was tested by an earlier segment
+        end = limit
+        while k < len(ends) and ends[k] <= limit:
+            i = ends[k]
+            k += 1
+            if rules.splits_at(text, blanked, start, i):
                 end = i
                 break
-        if end is None:
-            end = n
-        seg = text[start:end]
-        out.append((seg, SegmentType.EMPTY_SPACE if is_empty else SegmentType.SENTENCE))
-        i = end
+        out.append((text[start:end], kind))
+        start = end
     return out
-
-
-def _next_approximate_token(text: str, pos: int) -> str | None:
-    """First EmptySpaceTokenizer segment of the remaining text (lookahead)."""
-    if pos >= len(text):
-        return None
-    # tokenizing just a bounded window is enough: the first segment ends at
-    # the first space/non-space transition
-    window = text[pos : pos + 1000]
-    toks = empty_space_tokenize(window)
-    return toks[0][0] if toks else None
 
 
 class SentenceMaker:
@@ -159,24 +124,12 @@ class SentenceMaker:
         return out
 
     def _line_sentences(self, line: str) -> list[str]:
-        rules = get_ruleset(self.language_code)
         out: list[str] = []
-        for sent, st in rule_split(line, rules):
+        for sent, st in rule_split(line, self.language_code):
             if st != SegmentType.SENTENCE:
                 continue
-            words = 0
-            parts: list[str] = []
-            for tok, tt in diff_tokenize(sent):
-                if tt in (SegmentType.WORD, SegmentType.WORD_UPPERCASE, SegmentType.WORD_LOWERCASE):
-                    words += 1
-                if tt == SegmentType.EMPTY_SPACE:
-                    parts.append(" ")
-                elif tt in (
-                    SegmentType.WORD, SegmentType.NUMBER, SegmentType.WORD_WITH_NUMBER,
-                    SegmentType.WORD_UPPERCASE, SegmentType.WORD_LOWERCASE, SegmentType.PUNCTUATION,
-                ):
-                    parts.append(tok)
-            joined = _java_trim("".join(parts))
+            words, readable = word_count_and_readable(sent)
+            joined = _java_trim(readable)
             if words < self.min_length or not joined:
                 continue
             out.append(joined)
@@ -190,6 +143,11 @@ def provider_sentences(text: str, rules: RuleSet | str = "default", onedocperlin
     out: list[str] = []
 
     def split_into(chunk: str) -> None:
+        if _PLAIN.fullmatch(chunk) and not rules.boundary_ends(chunk, len(chunk) - 1):
+            # collapsing leaves the chunk as it is and no boundary entry ends
+            # before its last character: the splitter returns it whole
+            out.append(chunk)
+            return
         chunk = trim_and_replace_emptyspace(chunk, " ")
         for seg, st in rule_split(chunk, rules):
             if st != SegmentType.SENTENCE:
@@ -206,10 +164,9 @@ def provider_sentences(text: str, rules: RuleSet | str = "default", onedocperlin
     return out
 
 
+_JAVA_WHITESPACE = "".join(map(chr, range(0x21)))
+
+
 def _java_trim(s: str) -> str:
-    i, j = 0, len(s)
-    while i < j and ord(s[i]) <= 0x20:
-        i += 1
-    while j > i and ord(s[j - 1]) <= 0x20:
-        j -= 1
-    return s[i:j]
+    """Java ``String.trim()``: strip leading/trailing chars <= U+0020."""
+    return s.strip(_JAVA_WHITESPACE)

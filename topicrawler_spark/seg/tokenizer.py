@@ -7,105 +7,120 @@ from ``DiffTokenizer.java:55-93``. A NUL character terminates tokenization
 (the reference's read loop runs ``while (cp > 0)``).
 
 Classification uses Java char types at UTF-16 granularity (astral chars are
-two SURROGATE units and thus never split internally). The implementation is
-vectorized with numpy so it stays fast inside Arrow-batched pandas UDFs.
+two SURROGATE units and thus never split internally). Segments and their
+types come from one precompiled ``re`` pattern over character classes
+generated from the Java type table (``segtypes``): each alternative matches a
+maximal run whose type-group set decides ``SegmentType.infer``.
 """
 
 from __future__ import annotations
 
-from functools import lru_cache
-
-import numpy as np
+import re
 
 from topicrawler_spark import javachar as jc
 from topicrawler_spark.seg.segtypes import (
-    EMPTY_SPACE_TYPES,
+    EMPTY_SPACE_CLASS as _S,
+    LETTER_CLASS,
+    LOWER_CLASS,
+    NUMBER_CLASS,
+    PUNCT_CLASS,
     READABLE,
-    WORD_WITH_NUMBER_TYPES,
+    UPPER_CLASS,
+    WORD_CHAR_CLASS as _W,
     WORDLIKE,
     SegmentType,
-    infer_type,
 )
 
-_N_TYPES = 32
-_SPACE_LUT = np.zeros(_N_TYPES, dtype=bool)
-for _t in EMPTY_SPACE_TYPES:
-    _SPACE_LUT[_t] = True
-_WWN_LUT = np.zeros(_N_TYPES, dtype=bool)
-for _t in WORD_WITH_NUMBER_TYPES:
-    _WWN_LUT[_t] = True
-
-
-def _char_types(text: str) -> np.ndarray:
-    """Java char type per python char (astral chars classified SURROGATE)."""
-    cps = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
-    types = jc.types_array()[np.minimum(cps, 0x10FFFF)].astype(np.int8)
-    astral = cps > 0xFFFF
-    if astral.any():
-        types = np.where(astral, np.int8(jc.SURROGATE), types)
-    return types
-
-
-_mask_memo: dict[int, SegmentType] = {}
-
-
-def _type_for_mask(mask: int) -> SegmentType:
-    """Segment type for a bitmask of char types (bit i <=> type i present)."""
-    st = _mask_memo.get(mask)
-    if st is None:
-        types = frozenset(i for i in range(_N_TYPES) if mask & (1 << i))
-        st = infer_type(types)
-        _mask_memo[mask] = st
-    return st
-
-
-def _segments(text: str, types: np.ndarray, cuts: np.ndarray) -> list[tuple[str, SegmentType]]:
-    """Slice + classify segments; one vectorized OR-reduce for the types."""
-    bits = np.left_shift(np.int64(1), types.astype(np.int64))
-    masks = np.bitwise_or.reduceat(bits, cuts[:-1])
-    ends = cuts[1:]
-    out: list[tuple[str, SegmentType]] = []
-    for i in range(len(masks)):
-        a = int(cuts[i])
-        b = int(ends[i])
-        out.append((text[a:b], _type_for_mask(int(masks[i]))))
-    return out
+# One alternative per segment type, each a maximal run (possessive runs and
+# a negative lookahead on the run's class): letters-only runs split by case,
+# then numbers, then mixed letters and numbers; non-word runs are
+# punctuation when every character is punctuation.
+_DIFF = re.compile(
+    f"([{_S}]++)"
+    f"|([{UPPER_CLASS}]++)(?![{_W}])"
+    f"|([{LOWER_CLASS}]++)(?![{_W}])"
+    f"|([{NUMBER_CLASS}]++)(?![{_W}])"
+    f"|([{LETTER_CLASS}]++)(?![{_W}])"
+    f"|([{_W}]++)"
+    f"|([{PUNCT_CLASS}]++)(?![^{_S}{_W}])"
+    f"|([^{_S}{_W}]++)"
+)
+_DIFF_TYPES = (
+    None,
+    SegmentType.EMPTY_SPACE,
+    SegmentType.WORD_UPPERCASE,
+    SegmentType.WORD_LOWERCASE,
+    SegmentType.NUMBER,
+    SegmentType.WORD,
+    SegmentType.WORD_WITH_NUMBER,
+    SegmentType.PUNCTUATION,
+    SegmentType.NON_WORD,
+)
+# The word segments (WORD, WORD_UPPERCASE, WORD_LOWERCASE): maximal
+# letters-and-digits runs that hold letters only.
+_WORD = re.compile(f"(?<![{_W}])[{LETTER_CLASS}]++(?![{_W}])")
+# NON_WORD segments: maximal runs outside spaces, letters and digits that
+# hold something other than punctuation
+_NON_WORD = re.compile(
+    f"(?<![^{_S}{_W}])[{PUNCT_CLASS}]*+[^{PUNCT_CLASS}{_S}{_W}][^{_S}{_W}]*+"
+)
+_EMPTY_SPACE = re.compile(f"[{_S}]+")
+# EmptySpaceTokenizer runs: empty space, or everything up to the next space
+_EMPTY_SPACE_RUN = re.compile(f"[{_S}]+|[^{_S}]+")
+# Java Character.isDigit (DECIMAL_DIGIT_NUMBER by the codepoint's own type)
+_DIGIT_RUN = re.compile(f"[{jc.char_class({jc.DECIMAL_DIGIT_NUMBER})}]+")
+_REPEATED_CHAR = re.compile(r"(.)\1+", re.DOTALL)
 
 
 def diff_tokenize(text: str) -> list[tuple[str, SegmentType]]:
     """All segments of the text as (segment_text, type), in order."""
     nul = text.find("\x00")
+    end = nul if nul >= 0 else len(text)
+    return [(m.group(), _DIFF_TYPES[m.lastindex]) for m in _DIFF.finditer(text, 0, end)]
+
+
+def word_tokens(text: str) -> list[str]:
+    """The WORD, WORD_UPPERCASE and WORD_LOWERCASE segments of
+    ``diff_tokenize(text)``, in order."""
+    nul = text.find("\x00")
+    return _WORD.findall(text, 0, nul if nul >= 0 else len(text))
+
+
+def word_count_and_readable(text: str) -> tuple[int, str]:
+    """The number of word segments of ``diff_tokenize(text)``, and the text
+    with each EMPTY_SPACE segment replaced by one space and each NON_WORD
+    segment dropped (``SentenceMakerJava8``'s re-join of readable tokens)."""
+    nul = text.find("\x00")
     if nul >= 0:
         text = text[:nul]
-    if not text:
-        return []
-    types = _char_types(text)
-    space = _SPACE_LUT[types]
-    wwn = _WWN_LUT[types]
-    if len(text) == 1:
-        cuts = np.array([0, 1])
-    else:
-        brk = np.nonzero((space[:-1] != space[1:]) | (wwn[:-1] != wwn[1:]))[0] + 1
-        cuts = np.concatenate(([0], brk, [len(text)]))
-    return _segments(text, types, cuts)
+    return len(_WORD.findall(text)), _NON_WORD.sub("", _EMPTY_SPACE.sub(" ", text))
 
 
 def empty_space_tokenize(text: str) -> list[tuple[str, SegmentType]]:
     """Segments split only at space/non-space transitions
     (``EmptySpaceTokenizer.java:55-85``; NUL terminates)."""
     nul = text.find("\x00")
-    if nul >= 0:
-        text = text[:nul]
-    if not text:
-        return []
-    types = _char_types(text)
-    space = _SPACE_LUT[types]
-    if len(text) == 1:
-        cuts = np.array([0, 1])
-    else:
-        brk = np.nonzero(space[:-1] != space[1:])[0] + 1
-        cuts = np.concatenate(([0], brk, [len(text)]))
-    return _segments(text, types, cuts)
+    end = nul if nul >= 0 else len(text)
+    return [
+        (seg, segment_type(seg))
+        for seg in _EMPTY_SPACE_RUN.findall(text, 0, end)
+    ]
+
+
+def segment_type(seg: str) -> SegmentType:
+    """``SegmentType.infer`` over the characters of any non-empty segment:
+    the type of the single diff-token run, or what infer gives for the
+    union of the runs' type groups."""
+    kinds = {st for _, st in diff_tokenize(seg)}
+    if len(kinds) == 1:
+        return kinds.pop()
+    if kinds <= WORDLIKE:
+        return SegmentType.WORD
+    if kinds <= WORDLIKE | {SegmentType.NUMBER, SegmentType.WORD_WITH_NUMBER}:
+        return SegmentType.WORD_WITH_NUMBER
+    if kinds & WORDLIKE or SegmentType.WORD_WITH_NUMBER in kinds:
+        return SegmentType.UNKNOWN  # letters beside punctuation/space/other
+    return SegmentType.NON_WORD
 
 
 # ---------------------------------------------------------------------------
@@ -115,24 +130,14 @@ def empty_space_tokenize(text: str) -> list[tuple[str, SegmentType]]:
 
 def normalize_segment(text: str, st: SegmentType, level: int) -> str:
     """``Segment.asNormalizedString`` levels 0-4."""
+    if st in WORDLIKE:
+        return text.lower() if level >= 4 else text
     result = text
     if level >= 1 and st == SegmentType.NON_WORD:
-        # collapse consecutive identical codepoints
-        out: list[str] = []
-        for ch in text:
-            if not out or out[-1] != ch:
-                out.append(ch)
-        result = "".join(out)
+        result = _REPEATED_CHAR.sub(r"\1", text)  # collapse repeated codepoints
     if level >= 2:
         if st == SegmentType.WORD_WITH_NUMBER:
-            out = []
-            for ch in text:
-                if jc.is_digit(ord(ch)):
-                    if not out or out[-1] != "0":
-                        out.append("0")
-                else:
-                    out.append(ch)
-            result = "".join(out)
+            result = _DIGIT_RUN.sub("0", text)
         elif st == SegmentType.NUMBER:
             result = "0"
     if level >= 3 and st in (SegmentType.EMPTY_SPACE, SegmentType.PUNCTUATION):
@@ -184,8 +189,14 @@ def filtered_normalized_tokens(
 ) -> list[str]:
     """The LM tokenization used throughout the reference at its defaults
     (``Properties``: tokenfilter=5, tokennormalize=2, merge=1)."""
-    segs = filtered_segments(diff_tokenize(text), level_filter, mergetypes)
-    tokens = [normalize_segment(t, st, level_normalize) for t, st in segs]
+    if level_filter >= 5:
+        # only word segments pass, and merging keeps every one of them
+        tokens = word_tokens(text)
+        if level_normalize >= 4:
+            tokens = [t.lower() for t in tokens]
+    else:
+        segs = filtered_segments(diff_tokenize(text), level_filter, mergetypes)
+        tokens = [normalize_segment(t, st, level_normalize) for t, st in segs]
     if mergetokens:
         merged: list[str] = []
         for t in tokens:

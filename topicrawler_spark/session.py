@@ -43,6 +43,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # Timestamps in the pages table are UTC instants.
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark's DataFrame debugging wraps every Column-API call to record
+        # its Python call site in the JVM: several py4j round trips and a
+        # stack walk per call, only to improve analysis-error messages. The
+        # crawl driver builds each round's plans from thousands of such
+        # calls, and this roughly halves their py4j round trips.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

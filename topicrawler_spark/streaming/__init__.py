@@ -4,11 +4,8 @@ The reference is a continuous online system whose only streaming state is
 the URL-seen set, per-host politeness timers and running stats — all of
 which the batch-rounds engine carries as tables (SURVEY.md §2.8), so
 Structured Streaming is not required for crawl parity. This package provides
-the *optional* continuous mode and the stream-analytics operators a crawl
-metrics pipeline needs:
+the stream-analytics operators a crawl metrics pipeline needs:
 
-- ``continuous.foreach_batch_crawl`` — run the identical round function over
-  a streaming micro-batch source (rate-limited frontier feed)
 - ``analytics`` — watermarked tumbling-window aggregations and stateful
   sessionization over event streams
 """
