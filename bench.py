@@ -16,8 +16,7 @@ env knobs:
   BENCH_SCORE_MODE     (broadcast|join — join benches the corpus-scale
                        relational scoring path: one explode/join/pivot
                        lookup of the count-table stats per round)
-  BENCH_STORE          (canon|host — pages-store layout, default canon)
-  BENCH_BLOOM_MIN_SEEN / BENCH_ORDINAL_MAX / BENCH_SCORE_WAVES
+  BENCH_BLOOM_MIN_SEEN / BENCH_ORDINAL_MAX
                        (regime-threshold experiment knobs)
 """
 
@@ -76,10 +75,6 @@ def main() -> None:
     # distributed rank) for threshold-tuning experiments.
     ord_env = os.environ.get("BENCH_ORDINAL_MAX", "")
     ord_kw = {"ordinal_single_max": int(ord_env)} if ord_env else {}
-    # BENCH_SCORE_WAVES overrides score_waves (scoring-stage task waves per
-    # core) for straggler-tail tuning experiments.
-    waves_env = os.environ.get("BENCH_SCORE_WAVES", "")
-    waves_kw = {"score_waves": int(waves_env)} if waves_env else {}
     # BENCH_SCORE_MODE=join benches the corpus-scale RELATIONAL scoring path
     # (count-table joins instead of the broadcast LM — the regime once the
     # topic LM outgrows a driver broadcast). Results are parity-tested
@@ -93,19 +88,13 @@ def main() -> None:
         score_mode=score_mode,
         **bloom_kw,
         **ord_kw,
-        **waves_kw,
     )
     from topicrawler_spark.crawl.round import prepare_pages
 
     pages = pages_dataframe(spark, corpus)
     # one-time store preparation (partitioned+sorted) — on a real deployment
-    # this is the already-bucketed warehouse pages table. BENCH_STORE=host
-    # lays it out by host classKey so the fetch-join output is already
-    # host-clustered and the per-round html repartition disappears.
-    store_layout = os.environ.get("BENCH_STORE", "canon")
-    pages = prepare_pages(pages, by_host=store_layout == "host").localCheckpoint(
-        eager=True
-    )
+    # this is the already-bucketed warehouse pages table
+    pages = prepare_pages(pages).localCheckpoint(eager=True)
 
     # Warm-up: a 1-round throwaway crawl spins up the Python worker pool and
     # JIT-compiles the codegen'd stages — on a cluster these are the
@@ -181,7 +170,6 @@ def main() -> None:
             "warmup_sec": round(warmup_sec, 2),
             "cpus": cpus,
             **({"bloom_min_seen": int(bloom_env)} if bloom_env else {}),
-            **({"store": store_layout} if store_layout != "canon" else {}),
             **({"score_mode": score_mode} if score_mode != "broadcast" else {}),
         },
     }

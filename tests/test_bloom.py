@@ -116,6 +116,46 @@ def test_bloom_checkpoint_roundtrip(spark, tmp_path):
     assert more.state.round_no == 3
 
 
+def test_damaged_store_fails_resume(spark, tmp_path):
+    """A committed store missing a round's seen_delta segment, or a Bloom
+    round whose manifest lost its bloom_params, must refuse to resume:
+    either would silently resume a wrong URL-seen set."""
+    import json
+    import shutil
+
+    from topicrawler_spark.crawl.checkpoint import CheckpointStore
+    from topicrawler_spark.crawl.config import CrawlConfig
+    from topicrawler_spark.crawl.driver import run_crawl
+    from topicrawler_spark.datagen import generate_corpus, pages_dataframe, topic_corpus
+    from topicrawler_spark.lm.local import LocalLM
+    from topicrawler_spark.lm.perplexity import DocumentScorer
+
+    corpus = generate_corpus(n_pages=60, n_hosts=4, n_seeds=2, seed=9)
+    lm = LocalLM.from_texts([topic_corpus(9)], order=3)
+    cfg = CrawlConfig(order=3, per_host_quota=3, max_hops=8, bloom_min_seen=0)
+    ckpt = tmp_path / "ck"
+    run_crawl(
+        spark, pages_dataframe(spark, corpus), corpus.seeds,
+        DocumentScorer(lm, "kneser-ney"), 1, cfg, checkpoint_dir=str(ckpt),
+    )
+    assert CheckpointStore(str(ckpt)).resume(spark).bloom is not None
+
+    no_delta = tmp_path / "no_delta"
+    shutil.copytree(ckpt, no_delta)
+    shutil.rmtree(no_delta / "r00000" / "seen_delta")
+    with pytest.raises(FileNotFoundError, match="seen_delta"):
+        CheckpointStore(str(no_delta)).resume(spark)
+
+    no_params = tmp_path / "no_params"
+    shutil.copytree(ckpt, no_params)
+    manifest = no_params / "r00001" / "MANIFEST.json"
+    m = json.loads(manifest.read_text())
+    del m["bloom_params"]
+    manifest.write_text(json.dumps(m))
+    with pytest.raises(ValueError, match="bloom_params"):
+        CheckpointStore(str(no_params)).resume(spark)
+
+
 def test_for_keys_sizing():
     """Auto-sizing: >=10 bits/key with 4x headroom, per-task (shard) memory
     bounded at 8 MiB — shard COUNT scales with keys, never shard size."""

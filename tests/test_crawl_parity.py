@@ -131,9 +131,8 @@ def test_large_regime_strategies_match_small(spark, corpus, scorer, cfg):
     big_cfg = replace(
         cfg,
         salt_min_frontier=0,      # salted pre-rank always on
-        seen_broadcast_max=0,     # shuffle anti-join
+        broadcast_max=0,          # SMJ fetch, shuffle seen anti-join
         ordinal_single_max=0,     # two-phase ordinal
-        fetch_broadcast_max=0,    # co-partitioned SMJ fetch
         n_salt=4,
     )
     big = run_crawl(spark, pages, corpus.seeds, scorer, 3, big_cfg)

@@ -4,7 +4,8 @@
 - canonicalization / hashing / priority math compile to pure JVM expressions
   (no Python evaluation nodes)
 - filters on the pages scan are pushed into the parquet reader
-- small dimension joins broadcast
+- small dimension joins broadcast, and so do a small round's admitted and
+  seen sides
 - n-gram counting uses partial (map-side) aggregation
 - the heavy html column is pruned from post-extraction plans
 - the memory-mode seen set stays a union of checkpointed leaves, and the
@@ -15,6 +16,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -111,7 +113,7 @@ def test_seen_antijoin_shape(spark):
     assert "LeftAnti" in plan
 
 
-def _mini_round(spark, by_host=False, **cfg_kw):
+def _mini_round(spark, **cfg_kw):
     from topicrawler_spark.crawl.config import CrawlConfig
     from topicrawler_spark.crawl.round import (
         build_round_ops,
@@ -133,7 +135,7 @@ def _mini_round(spark, by_host=False, **cfg_kw):
     robots = build_robots_table(spark, pages, cfg)
     ops = build_round_ops(cfg, scorer_bc)
     state = init_state(spark, corpus.seeds, cfg)
-    pp = prepare_pages(pages, by_host=by_host).localCheckpoint(eager=True)
+    pp = prepare_pages(pages).localCheckpoint(eager=True)
     return run_round(
         spark, state, pp, scorer_bc, robots, cfg,
         frontier_size_hint=0, ops=ops,
@@ -149,6 +151,12 @@ def test_fetch_join_never_shuffles_page_store(spark):
     new_state, _ = _mini_round(spark)
     plan = _plan(new_state.frontier, "formatted")
     assert "BroadcastHashJoin Inner" in plan
+    # and the seen anti-join broadcasts the seen set (a shuffled hash join
+    # there cost round time at benchmark size)
+    simple = _plan(new_state.frontier, "simple")
+    assert re.search(
+        r"BroadcastHashJoin \[url_hash#\d+L\], \[_seen_h#\d+L\], LeftAnti", simple
+    ), simple
 
     # at-scale regime: SMJ where only the admitted side exchanges+sorts
     # (AQE off so the static plan is inspectable; with AQE on the runtime
@@ -162,7 +170,7 @@ def test_fetch_join_never_shuffles_page_store(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        new_state2, _ = _mini_round(spark, fetch_broadcast_max=0, seen_broadcast_max=0)
+        new_state2, _ = _mini_round(spark, broadcast_max=0)
         plan2 = _plan(new_state2.frontier, "formatted")
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
@@ -194,86 +202,19 @@ def test_small_round_budget_joins_without_broadcast(spark):
     assert not any("Exchange" in ln for ln in lines[window:join])
 
 
-def test_host_layout_store_scores_without_repartition(spark):
-    """With the host-layout store (prepare_pages(by_host=True)) the fetch
-    join keys on (host, canon): the store side STILL never exchanges (its
-    host hash-partitioning satisfies the join's clustered distribution;
-    only the admitted side aligns), and the scoring stage consumes the join
-    output directly — the round plan must contain NO round-time repartition
-    (the canon layout's html memo-locality shuffle)."""
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        _, result = _mini_round(
-            spark, by_host=True, fetch_broadcast_max=0, seen_broadcast_max=0
-        )
-        plan = _plan(result.results, "formatted")
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-    assert "SortMergeJoin" in plan
-    assert "ArrowEvalPython" in plan  # the scoring stage still runs
-    # every exchange in the round plan is join/agg alignment
-    # (ENSURE_REQUIREMENTS); the explicit html repartition is gone
-    assert "REPARTITION_BY" not in plan
-    # and the store side feeds its SMJ with no exchange, as before
-    lines = plan.splitlines()
-    for i, ln in enumerate(lines):
-        if "SortMergeJoin Inner" in ln:
-            left = "\n".join(lines[i + 1 : i + 4])
-            assert "Exchange" not in left.split("Sort")[0], left
-
-
-def test_host_layout_round_parity(spark):
-    """Both store layouts must produce identical round results."""
-    _, r_canon = _mini_round(spark)
-    _, r_host = _mini_round(spark, by_host=True)
-    a = sorted(
-        (row["canon"], round(row["perp"], 6))
-        for row in r_canon.results.select("canon", "perp").collect()
-    )
-    b = sorted(
-        (row["canon"], round(row["perp"], 6))
-        for row in r_host.results.select("canon", "perp").collect()
-    )
-    assert a == b and len(a) > 0
-
-
 def test_scoring_stage_is_host_partitioned(spark):
-    """The scoring UDF stage must run on host-partitioned input (memo
-    locality: one worker sees a whole host's pages)."""
-    from topicrawler_spark.crawl.config import CrawlConfig
-    from topicrawler_spark.crawl.round import (
-        build_round_ops,
-        init_state,
-        prepare_pages,
-        run_round,
-    )
-    from topicrawler_spark.datagen import generate_corpus, pages_dataframe, topic_corpus
-    from topicrawler_spark.lm.local import LocalLM
-    from topicrawler_spark.lm.perplexity import DocumentScorer
-
-    corpus = generate_corpus(n_pages=120, n_hosts=5, n_seeds=3, seed=5)
-    pages = pages_dataframe(spark, corpus)
-    cfg = CrawlConfig(order=3, per_host_quota=5, max_hops=5)
-    lm = LocalLM.from_texts([topic_corpus(5, 60)], order=3)
-    scorer_bc = spark.sparkContext.broadcast(DocumentScorer(lm, "kneser-ney"))
-    from topicrawler_spark.crawl.robots import build_robots_table
-
-    robots = build_robots_table(spark, pages, cfg)
-    ops = build_round_ops(cfg, scorer_bc)
-    state = init_state(spark, corpus.seeds, cfg)
-    pp = prepare_pages(pages).localCheckpoint(eager=True)
-    _, result = run_round(
-        spark, state, pp, scorer_bc, robots, cfg,
-        frontier_size_hint=0, ops=ops,
-    )
-    plan = _plan(result.results, "formatted")
-    assert "ArrowEvalPython" in plan  # the scoring stage
-    # the exchange feeding it partitions by host
-    assert "hashpartitioning(host" in plan
+    """The scoring UDF stage must run on the byte-balanced host bins (memo
+    locality: one worker sees a whole host's pages): the exchange directly
+    below ArrowEvalPython is the repartition on the probe int of the host's
+    size rank, not an exchange some join needs."""
+    _, result = _mini_round(spark)
+    lines = _plan(result.results, "simple").splitlines()
+    arrow = next(i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln)
+    below = next(i for i in range(arrow + 1, len(lines)) if "Exchange" in lines[i])
+    assert all("+- Project" in ln for ln in lines[arrow + 1 : below]), lines[arrow : below + 1]
+    exchange = lines[below]
+    assert "REPARTITION_BY_NUM" in exchange, exchange
+    assert "element_at(" in exchange and "_page_wrank" in exchange, exchange
 
 
 def test_pivot_stats_lookup_scans_dimension_once(spark):

@@ -163,8 +163,7 @@ def test_prereq_ordinal_distributed_regime_parity(
         _cfg(schedule_robots_prereqs=True),
         ordinal_single_max=0,
         salt_min_frontier=0,
-        seen_broadcast_max=0,
-        fetch_broadcast_max=0,
+        broadcast_max=0,
         n_salt=4,
     )
     run = run_crawl(

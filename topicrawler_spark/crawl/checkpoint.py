@@ -76,12 +76,11 @@ class CheckpointStore:
             # per round (OR-merged bits don't decompose into appends)
             state.bloom.write.mode("overwrite").parquet(self._dir(r, "bloom"))
             manifest["tables"].append("bloom")
-            if state.bloom_params is not None:
-                # the ACTIVE sizing must survive resume: probing a
-                # 6k-shard filter with the 32-shard static params would
-                # hash into the wrong shards and lose every bit
-                p = state.bloom_params
-                manifest["bloom_params"] = [p.n_shards, p.shard_bytes, p.n_hashes]
+            # the ACTIVE sizing must survive resume: probing a 6k-shard
+            # filter with the 32-shard static params would hash into the
+            # wrong shards and lose every bit
+            p = state.bloom_params
+            manifest["bloom_params"] = [p.n_shards, p.shard_bytes, p.n_hashes]
         if state.robots is not None:
             # prereq-mode discovered robots rules (append-only by host, but
             # small enough that a per-round rewrite is the simpler commit)
@@ -116,37 +115,28 @@ class CheckpointStore:
             return None
         # The seen set is the union of per-round append segments. A missing
         # segment must fail loudly — silently skipping it would resume with an
-        # incomplete seen set and re-fetch already-crawled URLs. A round
-        # written by the legacy full-rewrite format carries a complete `seen`
-        # table instead, which supersedes all earlier segments.
-        seen_dirs: list[str] = []
-        for i in range(r + 1):
-            delta = self._dir(i, "seen_delta")
-            legacy = self._dir(i, "seen")
-            if os.path.isdir(delta):
-                seen_dirs.append(delta)
-            elif os.path.isdir(legacy):
-                seen_dirs = [legacy]
-            else:
+        # incomplete seen set and re-fetch already-crawled URLs.
+        seen_dirs = [self._dir(i, "seen_delta") for i in range(r + 1)]
+        for i, d in enumerate(seen_dirs):
+            if not os.path.isdir(d):
                 raise FileNotFoundError(
                     f"checkpoint {self.root}: round {i} committed (last round "
-                    f"{r}) but has neither a seen_delta segment nor a legacy "
-                    f"seen table — the store is damaged; refusing to resume "
-                    f"with an incomplete URL-seen set"
+                    f"{r}) but has no seen_delta segment — the store is "
+                    f"damaged; refusing to resume with an incomplete URL-seen set"
                 )
-        bloom = (
-            spark.read.schema(BLOOM_SCHEMA).parquet(self._dir(r, "bloom"))
-            if os.path.isdir(self._dir(r, "bloom"))
-            else None
-        )
-        bloom_params = None
-        if bloom is not None:
+        bloom = bloom_params = None
+        if os.path.isdir(self._dir(r, "bloom")):
             with open(self._manifest(r)) as f:
                 bp = json.load(f).get("bloom_params")
-            if bp is not None:
-                from topicrawler_spark.crawl.bloom import BloomParams
+            if bp is None:
+                raise ValueError(
+                    f"checkpoint {self.root}: round {r} has a Bloom filter but "
+                    f"its manifest has no bloom_params — the store is damaged"
+                )
+            from topicrawler_spark.crawl.bloom import BloomParams
 
-                bloom_params = BloomParams(*bp)
+            bloom = spark.read.schema(BLOOM_SCHEMA).parquet(self._dir(r, "bloom"))
+            bloom_params = BloomParams(*bp)
         robots = (
             spark.read.schema(HOST_RULES_SCHEMA).parquet(self._dir(r, "robots"))
             if os.path.isdir(self._dir(r, "robots"))

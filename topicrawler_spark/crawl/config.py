@@ -44,9 +44,6 @@ class CrawlConfig:
     # below this frontier size the salted pre-rank stage costs more than the
     # skew it defends against; the driver passes a size hint per round
     salt_min_frontier: int = 2_000_000
-    # above this seen-set size the per-round driver collect+rebroadcast of
-    # the seen set costs more (serially!) than a parallel shuffle anti-join
-    seen_broadcast_max: int = 50_000
     # memory-mode seen checkpoints are per-round SEGMENTS (only the new rows
     # materialize; the carried set is a union of leaves — the in-memory twin
     # of the store's append-only segments). Every N rounds the union is
@@ -60,25 +57,16 @@ class CrawlConfig:
     # (range partition + local rank + windowed prefix-sum offsets, still
     # action-free). Both keep the round one Spark query.
     ordinal_single_max: int = 200_000
-    # below this frontier size the fetch join broadcasts the admitted set
-    # (driver collect+build is cheap); above it the join runs as a
-    # co-partitioned sort-merge against the canon-partitioned page store —
-    # only the admitted side shuffles, the store is never re-sorted
-    fetch_broadcast_max: int = 50_000
-    # task waves per core for the Arrow scoring stage (canon-layout store
-    # only — the host layout keeps the store's own partitioning). Hash
-    # partitioning on host balances page COUNTS but not html bytes, so the
-    # stage's tail task runs ~2x its median; more waves amortize that tail
-    # across the other slots at the cost of one extra Arrow/worker spin-up
-    # per task. 4 waves keeps the tail under ~10% of stage wall at 8-32
-    # slots without measurably raising total task time.
-    score_waves: int = 4
-    # target pages per scoring bin. The Arrow scoring stage's bin count is
-    # data-sized — clamp(expected_pages / score_pages_per_bin, slots,
-    # score_waves * slots) — so small (quota-bounded) rounds are not sliced
-    # into slot-proportional slivers whose per-task fixed costs dominate,
-    # while at production volume the waves cap still bounds task size.
-    score_pages_per_bin: int = 1500
+    # below this frontier size (in a small round) the admitted set and the
+    # seen set join as broadcasts: the fetch join and the frontier
+    # subtraction share one broadcast of the admitted set, and the seen
+    # anti-join broadcasts the seen set. Above it the driver collect+build
+    # is serial time every round, so the fetch join runs co-partitioned
+    # against the canon-partitioned page store (only the admitted side
+    # shuffles) and the seen anti-join shuffles the seen side only. (At
+    # benchmark size, shuffled hash joins in their place cut jobs per round
+    # but made rounds slower.)
+    broadcast_max: int = 50_000
     # Prerequisite scheduling (PreconditionEnforcer, jar!heritrix-engine/
     # .../prefetch/PreconditionEnforcer.java:170-254): when True, robots
     # rules start UNKNOWN and are discovered during the crawl — content

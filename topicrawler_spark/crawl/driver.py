@@ -215,9 +215,6 @@ def run_crawl(
             ):
                 from topicrawler_spark.crawl.bloom import BloomParams, bloom_add
 
-                active = state.bloom_params or (
-                    cfg.bloom_params() if state.bloom is not None else None
-                )
                 build = None
                 if state.bloom is None and frontier_hint >= cfg.bloom_min_seen:
                     build = (
@@ -228,8 +225,7 @@ def run_crawl(
                 elif (
                     state.bloom is not None
                     and cfg.bloom_auto_size
-                    and active is not None
-                    and frontier_hint > active.capacity
+                    and frontier_hint > state.bloom_params.capacity
                 ):
                     build = BloomParams.for_keys(frontier_hint, n_hashes=cfg.bloom_hashes)
                 if build is not None:

@@ -158,8 +158,3 @@ def apply_priority_py(
     if is_prerequisite:
         d = max(HIGHEST, d - 1)
     return d, c
-
-
-def format_perplexity(perp: float) -> str:
-    """The reference's ``%012g`` perplexity serialization."""
-    return "%012g" % perp

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, replace
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from topicrawler_spark.crawl.config import CrawlConfig
@@ -63,8 +63,8 @@ class CrawlState:
     # a crawl-static table. None = nothing known yet.
     robots: DataFrame | None = None
     # the ACTIVE Bloom sizing (auto-sized from the seen-count hint at
-    # activation/rebuild, checkpointed in the manifest). None with a live
-    # bloom means a legacy filter built from cfg's static params.
+    # activation/rebuild, checkpointed in the manifest); set exactly when
+    # `bloom` is
     bloom_params: object | None = None
 
 
@@ -188,6 +188,19 @@ def _observe(df: DataFrame, *aggs: Column) -> tuple[DataFrame, Observation]:
     return df.observe(obs, *aggs), obs
 
 
+# task waves per core for the Arrow scoring stage. Hash partitioning on host
+# balances page COUNTS but not html bytes, so the stage's tail task runs ~2x
+# its median; more waves amortize that tail across the other slots at the
+# cost of one extra Arrow/worker spin-up per task. 4 waves keeps the tail
+# under ~10% of stage wall at 8-32 slots without measurably raising total
+# task time.
+SCORE_WAVES = 4
+# target pages per scoring bin: small (quota-bounded) rounds are not sliced
+# into slot-proportional slivers whose per-task fixed costs dominate, while
+# at production volume the waves cap still bounds task size
+SCORE_PAGES_PER_BIN = 1500
+
+
 def score_bin_count(
     pages_hint: int | None, slots: int, per_bin: int, waves: int
 ) -> int:
@@ -212,7 +225,7 @@ def score_bin_count(
     return max(slots, min(target, waves * slots))
 
 
-def prepare_pages(pages: DataFrame, by_host: bool = False) -> DataFrame:
+def prepare_pages(pages: DataFrame) -> DataFrame:
     """One-time page-store preparation: key the content by *canonical* URL.
 
     The crawler fetches by canonical URL (candidates arrive in arbitrary
@@ -224,17 +237,7 @@ def prepare_pages(pages: DataFrame, by_host: bool = False) -> DataFrame:
     is the job that writes the url_hash-bucketed pages table the per-round
     fetch join is co-partitioned against.
 
-    ``by_host=True`` lays the store out by host classKey instead (partition
-    by ``_page_host``, sort by host then canon): the fetch join then keys on
-    (host, canon) and its output arrives already host-clustered, so the
-    per-round html repartition before scoring — the round's single biggest
-    shuffle payload — disappears in both join regimes (broadcast preserves
-    the streamed store's layout; SMJ co-partitions on host with only the
-    admitted side exchanging). The trade: store partition sizes follow host
-    sizes, so a pathologically large host concentrates its pages in one
-    partition, where the canon layout spreads them uniformly.
-
-    The canon layout also stamps ``_page_wrank``: the host's dense rank by
+    The store also stamps ``_page_wrank``: the host's dense rank by
     total stored html bytes, descending. The per-round scoring repartition
     bins hosts by ``rank % n_bins`` (round-robin over the size order)
     instead of a blind host hash — blind hashing leaves the stage's tail
@@ -251,17 +254,6 @@ def prepare_pages(pages: DataFrame, by_host: bool = False) -> DataFrame:
         .groupBy("_page_canon")
         .agg(F.min_by("html", "url").alias("html"))
     )
-    # hash-partition + sort by the join key(s) NOW, so that (after the
-    # driver's localCheckpoint pins partitioning and ordering into the leaf)
-    # every round's sort-merge fetch join needs NO exchange and NO sort on
-    # the store side — the Iceberg-bucketed-table equivalent for local mode
-    if by_host:
-        prepared = prepared.withColumn(
-            "_page_host", host_classkey(F.col("_page_canon"))
-        )
-        return prepared.repartition(F.col("_page_host")).sortWithinPartitions(
-            "_page_host", "_page_canon"
-        )
     weights = (
         prepared.select(
             host_classkey(F.col("_page_canon")).alias("_wh"),
@@ -270,49 +262,54 @@ def prepare_pages(pages: DataFrame, by_host: bool = False) -> DataFrame:
         .groupBy("_wh")
         .agg(F.sum("_wb").alias("_wb"))
     )
-    from pyspark.sql import Window as _WRank
-
-    w_rank = _WRank.orderBy(F.desc("_wb"), F.col("_wh"))
+    w_rank = Window.orderBy(F.desc("_wb"), F.col("_wh"))
     ranked = weights.select(
         "_wh", (F.row_number().over(w_rank) - 1).cast("int").alias("_page_wrank")
     )
     prepared = prepared.join(
         ranked, host_classkey(F.col("_page_canon")) == F.col("_wh"), "left"
     ).drop("_wh")
+    # hash-partition + sort by the join key NOW, so that (after the driver's
+    # localCheckpoint pins partitioning and ordering into the leaf) every
+    # round's sort-merge fetch join needs NO exchange and NO sort on the
+    # store side — the Iceberg-bucketed-table equivalent for local mode
     return prepared.repartition(F.col("_page_canon")).sortWithinPartitions("_page_canon")
 
 
-def init_state(
-    spark: SparkSession, seeds: list[str], cfg: CrawlConfig | None = None
-) -> CrawlState:
-    cfg = cfg or CrawlConfig()
-    raw = spark.createDataFrame([(u, i) for i, u in enumerate(seeds)], "url string, idx long")
+def _seed_rows(
+    spark: SparkSession, urls: list[str], cfg: CrawlConfig, ord_r: int, ord_k: Column
+) -> DataFrame:
+    """Frontier rows for a URL list at seed priority, one per canonical URL.
+    ``ord_k`` is a column over ``idx``, the URL's position in ``urls``."""
+    raw = spark.createDataFrame([(u, i) for i, u in enumerate(urls)], "url string, idx long")
     canon = canonical_url(F.col("url"))
-    seeded = raw.select(
-        "url",
-        canon.alias("canon"),
-        "idx",
-    ).dropDuplicates(["canon"])
+    seeded = raw.select("url", canon.alias("canon"), "idx").dropDuplicates(["canon"])
     directive, cost = apply_priority(
         F.lit(cfg.seed_perplexity),
         boundaries=cfg.boundaries,
         maxvalue=cfg.maxvalue,
         max_precedence=cfg.max_precedence,
     )
-    frontier = seeded.select(
+    return seeded.select(
         "url",
         "canon",
         url_hash64(F.col("canon")).alias("url_hash"),
         host_classkey(F.col("canon")).alias("host"),
         directive.alias("directive"),
         cost.alias("precedence"),
-        F.lit(0).alias("ord_r"),
-        (F.col("idx") + 1).alias("ord_k"),
+        F.lit(ord_r).alias("ord_r"),
+        ord_k.alias("ord_k"),
         F.lit(0).alias("hops"),
         F.lit(None).cast("string").alias("via"),
         F.lit(0).alias("retries"),
         F.lit(0).alias("not_before"),
     )
+
+
+def init_state(
+    spark: SparkSession, seeds: list[str], cfg: CrawlConfig | None = None
+) -> CrawlState:
+    frontier = _seed_rows(spark, seeds, cfg or CrawlConfig(), 0, F.col("idx") + 1)
     seen = frontier.select("url_hash", "canon")
     host_fetched = spark.createDataFrame([], HOST_SCHEMA)
     return CrawlState(0, frontier, seen, host_fetched)
@@ -343,31 +340,9 @@ def inject_urls(
     seen_delta segment holds exactly the additions — resume then replays
     the post-injection state, including the Bloom filter. Without a store
     the additions live only in the returned in-memory state."""
-    cfg = cfg or CrawlConfig()
-    raw = spark.createDataFrame(
-        [(u, i) for i, u in enumerate(urls)], "url string, idx long"
-    )
-    canon = canonical_url(F.col("url"))
-    seeded = raw.select("url", canon.alias("canon"), "idx").dropDuplicates(["canon"])
-    directive, cost = apply_priority(
-        F.lit(cfg.seed_perplexity),
-        boundaries=cfg.boundaries,
-        maxvalue=cfg.maxvalue,
-        max_precedence=cfg.max_precedence,
-    )
-    rows = seeded.select(
-        "url",
-        "canon",
-        url_hash64(F.col("canon")).alias("url_hash"),
-        host_classkey(F.col("canon")).alias("host"),
-        directive.alias("directive"),
-        cost.alias("precedence"),
-        F.lit(state.round_no).alias("ord_r"),
-        (-(F.col("idx") + 1) - F.lit(1 << 32)).cast("long").alias("ord_k"),
-        F.lit(0).alias("hops"),
-        F.lit(None).cast("string").alias("via"),
-        F.lit(0).alias("retries"),
-        F.lit(0).alias("not_before"),
+    rows = _seed_rows(
+        spark, urls, cfg or CrawlConfig(), state.round_no,
+        (-(F.col("idx") + 1) - F.lit(1 << 32)).cast("long"),
     )
     if not force_fetch:
         rows = rows.join(
@@ -392,8 +367,7 @@ def inject_urls(
         from topicrawler_spark.crawl.bloom import bloom_add
 
         bloom = bloom_add(
-            spark, bloom, seen_additions.select("url_hash"),
-            state.bloom_params or cfg.bloom_params(),
+            spark, bloom, seen_additions.select("url_hash"), state.bloom_params
         )
     new_state = CrawlState(
         state.round_no + (1 if store is not None else 0),
@@ -410,6 +384,25 @@ def inject_urls(
         if resumed is not None:
             new_state = resumed
     return new_state
+
+
+def _rank(
+    df: DataFrame, order_cols: list[str], name: str, single: bool
+) -> tuple[DataFrame, tuple]:
+    """``df`` with ``name``, a dense 1-based long rank in the global order of
+    ``order_cols``, and the intermediates to unpersist after the round.
+
+    ``single``: one global window. A single reducer is trivial for a tiny
+    round and keeps run_round free of actions, so the round runs as ONE
+    Spark query at state-commit time. Otherwise the lazy two-phase
+    distributed rank: a large single reducer plus its single-partition
+    downstream (frontier write) is core-independent serial time that
+    dominates the round's scaling residue."""
+    if single:
+        w = Window.orderBy(*order_cols)
+        return df.withColumn(name, F.row_number().over(w).cast("long")), ()
+    ranked, cached = zip_with_order(df, order_cols, name=name)
+    return ranked, (cached,)
 
 
 def run_round(
@@ -432,14 +425,20 @@ def run_round(
     ops = ops or build_round_ops(cfg, scorer_bc)
     round_no = state.round_no + 1
     # Small-frontier regime (driver passes a size upper bound): skip the
-    # salted pre-rank (host-skew defense costs more than it saves) and
-    # broadcast the admitted/seen sides of the round's joins so the big
-    # page store is never shuffled. At 10^10-frontier scale the hint exceeds
-    # the threshold and every join falls back to the shuffle/bucketed path.
+    # salted pre-rank (host-skew defense costs more than it saves), and
+    # below cfg.broadcast_max broadcast the admitted/seen sides of the
+    # round's joins so the big page store is never shuffled. At
+    # 10^10-frontier scale the hint exceeds the thresholds and every join
+    # falls back to the shuffle/bucketed path.
     small_round = (
         frontier_size_hint is not None and frontier_size_hint < cfg.salt_min_frontier
     )
     n_salt = 1 if small_round else cfg.n_salt
+    bcast = small_round and frontier_size_hint < cfg.broadcast_max
+    # tiny rounds rank in one global window (see _rank)
+    single_rank = (
+        frontier_size_hint is not None and frontier_size_hint < cfg.ordinal_single_max
+    )
 
     # ---- 0. prerequisite scheduling (PreconditionEnforcer mapping) --------
     # In prereq mode robots rules are crawl STATE (state.robots), not a
@@ -483,23 +482,11 @@ def run_round(
         prereq_urls = hosts_needing.select("host", robots_url.alias("url"))
         # negative ordinals: unique, and sort before this round's content.
         # Bounded by NEW hosts this round — but a mass seed injection makes
-        # that the whole host universe at once, so the rank must not be a
-        # single-reducer window. Same regime split as the enqueue ordinal:
-        # tiny rounds keep the trivial global window (round stays one query),
-        # otherwise the two-phase distributed rank.
-        if (
-            frontier_size_hint is not None
-            and frontier_size_hint < cfg.ordinal_single_max
-        ):
-            from pyspark.sql import Window as _W
-
-            prereq_urls = prereq_urls.withColumn(
-                "_hrank", F.row_number().over(_W.orderBy("host")).cast("long")
-            )
-            prereq_zip_cached: tuple = ()
-        else:
-            prereq_urls, _pzc = zip_with_order(prereq_urls, ["host"], name="_hrank")
-            prereq_zip_cached = (_pzc,)
+        # that the whole host universe at once, so past tiny rounds the rank
+        # must not be a single-reducer window.
+        prereq_urls, prereq_zip_cached = _rank(
+            prereq_urls, ["host"], "_hrank", single_rank
+        )
         prereqs = prereq_urls.select(
             "url",
             F.col("url").alias("canon"),
@@ -575,10 +562,9 @@ def run_round(
     # precedence floor + retry snooze: a snoozed entry (not_before in the
     # future) is simply not admission-eligible this round — it stays in the
     # frontier via `remaining` without consuming its host's quota.
-    # coalesce: frontiers checkpointed before the retry columns read as null.
     fr = fr.filter(
         (F.col("precedence") < cfg.precedence_floor)
-        & (F.coalesce(F.col("not_before"), F.lit(0)) <= F.lit(round_no))
+        & (F.col("not_before") <= F.lit(round_no))
     )
     if cfg.max_active_hosts is not None:
         # host selection order: activate the best queues first (min uri
@@ -601,15 +587,11 @@ def run_round(
     # (this anti-join and the fetch join) broadcast the IDENTICAL plan keyed
     # on the SAME column (canon), so the physical planner's exchange reuse
     # builds the hashed relation once instead of racing two builds against an
-    # unpopulated cache. Past fetch_broadcast_max the driver-side
-    # collect+build becomes the round's serial bottleneck and the joins flip
-    # to sort-merge: the canon-partitioned page store side needs no exchange
+    # unpopulated cache. Past broadcast_max the driver-side collect+build
+    # becomes the round's serial bottleneck and the joins flip to
+    # sort-merge: the canon-partitioned page store side needs no exchange
     # and no sort, only the admitted side shuffles.
-    bcast_adm = small_round and (
-        frontier_size_hint is not None
-        and frontier_size_hint < cfg.fetch_broadcast_max
-    )
-    adm_b = F.broadcast(admitted) if bcast_adm else admitted
+    adm_b = F.broadcast(admitted) if bcast else admitted
     remaining = frontier_eff.alias("_fr").join(
         adm_b.alias("_adm"),
         F.col("_fr.canon") == F.col("_adm.canon"),
@@ -628,70 +610,53 @@ def run_round(
     # the admitted set means the store is never shuffled; at warehouse scale
     # (admitted too big to broadcast) this becomes the url_hash-bucketed
     # co-partitioned join instead.
-    if "_page_host" in pages.columns:
-        # host-layout store: key the join on (host, canon). The store side
-        # is already hash-partitioned on _page_host, which satisfies the
-        # join's clustered distribution, so only the admitted side ever
-        # exchanges — and the output is host-clustered as-is, making the
-        # memo-locality repartition below a no-op we skip entirely. The
-        # round's biggest shuffle payload (fetched html) never moves.
-        fetched = pages.join(
-            adm_b,
-            (pages["_page_host"] == admitted["host"])
-            & (pages["_page_canon"] == admitted["canon"]),
-            "inner",
-        ).drop("_page_canon", "_page_host")
-    else:
-        fetched = pages.join(
-            adm_b, pages["_page_canon"] == admitted["canon"], "inner"
-        ).drop("_page_canon")
-        # Memo locality: route all of a host's pages to the same task (and
-        # thus the same Python worker) before scoring — site chrome repeats
-        # per host, so the sentence/line memos only pay off if one worker
-        # sees the whole host. Skew-safe: the politeness quota already caps
-        # any host's rows per round, and byte-balanced bins (below) plus up
-        # to cfg.score_waves waves of tasks per core let stragglers
-        # (cold-memo or text-heavy hosts) amortize instead of pinning the
-        # stage on one task. On a cluster this is executor affinity for
-        # per-host state.
-        #
-        # Bin COUNT is sized by the expected page volume, not by slots:
-        # bins = clamp(pages_hint / score_pages_per_bin, slots, waves*slots).
-        # A quota-bounded round sliced into waves*slots bins regardless of
-        # volume makes per-task fixed costs (python worker spin-up, Arrow
-        # batch setup, per-worker memo warm-up) scale with the SLOT count —
-        # measured 2c-vs-8c at fixed input, the Arrow-pass stages burned
-        # ~1.7x the task-seconds at 4x the slots and capped crawl speedup at
-        # ~2x. At production volume the data term dominates and the waves
-        # cap sets task granularity, so the at-scale plan is unchanged.
-        slots = max(spark.sparkContext.defaultParallelism, 1)
-        pages_hint = fetched_hint if fetched_hint is not None else frontier_size_hint
-        n_bins = score_bin_count(
-            pages_hint, slots, cfg.score_pages_per_bin, cfg.score_waves
+    fetched = pages.join(
+        adm_b, pages["_page_canon"] == admitted["canon"], "inner"
+    ).drop("_page_canon")
+    # Memo locality: route all of a host's pages to the same task (and thus
+    # the same Python worker) before scoring — site chrome repeats per host,
+    # so the sentence/line memos only pay off if one worker sees the whole
+    # host. Skew-safe: the politeness quota already caps any host's rows per
+    # round, and byte-balanced bins (below) plus up to SCORE_WAVES waves of
+    # tasks per core let stragglers (cold-memo or text-heavy hosts) amortize
+    # instead of pinning the stage on one task. On a cluster this is
+    # executor affinity for per-host state.
+    #
+    # Bin COUNT is sized by the expected page volume, not by slots:
+    # bins = clamp(pages_hint / SCORE_PAGES_PER_BIN, slots, waves*slots).
+    # A quota-bounded round sliced into waves*slots bins regardless of
+    # volume makes per-task fixed costs (python worker spin-up, Arrow batch
+    # setup, per-worker memo warm-up) scale with the SLOT count — measured
+    # 2c-vs-8c at fixed input, the Arrow-pass stages burned ~1.7x the
+    # task-seconds at 4x the slots and capped crawl speedup at ~2x. At
+    # production volume the data term dominates and the waves cap sets task
+    # granularity, so the at-scale plan is unchanged.
+    slots = max(spark.sparkContext.defaultParallelism, 1)
+    pages_hint = fetched_hint if fetched_hint is not None else frontier_size_hint
+    n_bins = score_bin_count(pages_hint, slots, SCORE_PAGES_PER_BIN, SCORE_WAVES)
+    if "_page_wrank" in fetched.columns:
+        # Byte-balanced bins: round-robin the store's host-size rank
+        # (prepare_pages' _page_wrank) across the bins, so each bin draws
+        # one host from every size stratum instead of a random hash draw —
+        # a blind host hash leaves the stage tail at ~2x median when
+        # quota-maxed hosts collide. repartition() runs its key through
+        # murmur3 before the mod, which would scatter the residues with
+        # collisions, so the residue is swapped for a probe int whose murmur
+        # bucket IS the target bin (exact placement, one n_bins-element
+        # array literal in the plan). Hosts stay whole either way — memo
+        # locality is unchanged.
+        probes = partition_probe_ints(n_bins)
+        probe_arr = F.array(*[F.lit(p) for p in probes])
+        bin_col = F.coalesce(
+            F.col("_page_wrank"),
+            F.pmod(F.xxhash64(F.col("host")), F.lit(n_bins)).cast("int"),
         )
-        if "_page_wrank" in fetched.columns:
-            # Byte-balanced bins: round-robin the store's host-size rank
-            # (prepare_pages' _page_wrank) across the bins, so each bin
-            # draws one host from every size stratum instead of a random
-            # hash draw — a blind host hash leaves the stage tail at ~2x
-            # median when quota-maxed hosts collide. repartition() runs its
-            # key through murmur3 before the mod, which would scatter the
-            # residues with collisions, so the residue is swapped for a
-            # probe int whose murmur bucket IS the target bin (exact
-            # placement, one n_bins-element array literal in the plan).
-            # Hosts stay whole either way — memo locality is unchanged.
-            probes = partition_probe_ints(n_bins)
-            probe_arr = F.array(*[F.lit(p) for p in probes])
-            bin_col = F.coalesce(
-                F.col("_page_wrank"),
-                F.pmod(F.xxhash64(F.col("host")), F.lit(n_bins)).cast("int"),
-            )
-            fetched = fetched.repartition(
-                n_bins,
-                F.element_at(probe_arr, (F.pmod(bin_col, F.lit(n_bins)) + 1).cast("int")),
-            ).drop("_page_wrank")
-        else:
-            fetched = fetched.repartition(n_bins, "host")
+        fetched = fetched.repartition(
+            n_bins,
+            F.element_at(probe_arr, (F.pmod(bin_col, F.lit(n_bins)) + 1).cast("int")),
+        ).drop("_page_wrank")
+    else:
+        fetched = fetched.repartition(n_bins, "host")
     is_robots = F.col("canon").endswith("/robots.txt")
     got_page = F.col("html").isNotNull()
     page_ok = F.col("fetch_ok") & ~is_robots  # a fetched content page
@@ -793,12 +758,10 @@ def run_round(
     # (terminal). The anti-join probes the cached admitted/scored sets —
     # both bounded by the per-round admission quota.
     failed = admitted.join(scored.select("canon"), "canon", "left_anti")
-    retry = failed.filter(
-        F.coalesce(F.col("retries"), F.lit(0)) < F.lit(cfg.max_retries)
-    ).select(
+    retry = failed.filter(F.col("retries") < F.lit(cfg.max_retries)).select(
         "url", "canon", "url_hash", "host", "directive", "precedence",
         "ord_r", "ord_k", "hops", "via",
-        (F.coalesce(F.col("retries"), F.lit(0)) + F.lit(1)).alias("retries"),
+        (F.col("retries") + F.lit(1)).alias("retries"),
         F.lit(round_no + cfg.retry_delay_rounds()).alias("not_before"),
     )
 
@@ -910,23 +873,18 @@ def run_round(
     # in-round dedup: first discovery (parent order, link index) wins.
     # Keyed on the 64-bit fingerprint so the window shuffle and the following
     # seen anti-join share one exchange (same hash partitioning, no reshuffle).
-    from pyspark.sql import Window
-
     w = Window.partitionBy("url_hash").orderBy("p_ord_r", "p_ord_k", "link_idx")
     cands = cands.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
     # seen-set dedup: left-anti join on the fingerprint. Tiny crawls keep
-    # the whole seen set broadcastable; past seen_broadcast_max the driver
+    # the whole seen set broadcastable; past broadcast_max the driver
     # collect+rebroadcast is serial time every round, so the join flips to a
     # parallel shuffle anti-join (cands are already hash-partitioned on
     # url_hash by the dedup window — only the seen side exchanges). At 10^10
     # URLs this is the bucketed anti-join against the url_hash-partitioned
     # seen table.
-    bcast_seen = (
-        frontier_size_hint is not None and frontier_size_hint < cfg.seen_broadcast_max
-    )
     seen_side = (
-        F.broadcast(state.seen) if bcast_seen else state.seen
+        F.broadcast(state.seen) if bcast else state.seen
     ).select(F.col("url_hash").alias("_seen_h"))
     bloom_obs: tuple = ()
     if state.bloom is not None:
@@ -936,7 +894,7 @@ def run_round(
         # exact_confirm the result is exactly the plain anti-join's.
         from topicrawler_spark.crawl.bloom import bloom_probe
 
-        probed = bloom_probe(cands, state.bloom, state.bloom_params or cfg.bloom_params())
+        probed = bloom_probe(cands, state.bloom, state.bloom_params)
         # pre-filter effectiveness: `fresh` candidates skip the exact seen
         # anti-join entirely; only `suspect` probes it
         fresh, fresh_obs = _observe(
@@ -993,25 +951,8 @@ def run_round(
     else:
         enq = gate_by_robots(new_unique, rules_df, shuffle_hash=small_round)
 
-    # deterministic ordinal: dense rank over (parent ordinal, link index).
-    # Tiny rounds: one global window (single reducer — trivial at this size)
-    # keeps run_round free of actions, so a whole round executes as ONE
-    # Spark query at state-commit time. Bigger rounds: the two-phase
-    # distributed rank — a 50k-row single reducer plus its single-partition
-    # downstream (frontier write) is core-independent serial time that
-    # dominates the round's scaling residue.
-    tiny_round = (
-        frontier_size_hint is not None and frontier_size_hint < cfg.ordinal_single_max
-    )
-    if tiny_round:
-        w_ord = Window.orderBy("p_ord_r", "p_ord_k", "link_idx")
-        enq = enq.withColumn("ord_k", F.row_number().over(w_ord).cast("long"))
-        zip_cached: tuple = ()
-    else:
-        enq, _zc = zip_with_order(
-            enq, ["p_ord_r", "p_ord_k", "link_idx"], name="ord_k"
-        )
-        zip_cached = (_zc,)
+    # deterministic ordinal: dense rank over (parent ordinal, link index)
+    enq, zip_cached = _rank(enq, ["p_ord_r", "p_ord_k", "link_idx"], "ord_k", single_rank)
     frontier_next = remaining.select(*_FRONTIER_COLS).unionByName(
         enq.select(
             "url",
@@ -1045,8 +986,7 @@ def run_round(
         from topicrawler_spark.crawl.bloom import bloom_add
 
         bloom_next = bloom_add(
-            spark, state.bloom, new_unique.select("url_hash"),
-            state.bloom_params or cfg.bloom_params(),
+            spark, state.bloom, new_unique.select("url_hash"), state.bloom_params
         )
     else:
         bloom_next = None

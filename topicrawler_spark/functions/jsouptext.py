@@ -210,11 +210,6 @@ def extract_text(html_utf8: str, cleaner=clean_min) -> str:
     return cleaner(plain)
 
 
-def scoring_text(html_utf8: str, cleaner=clean_min) -> str:
-    """The exact text the scorer consumes: extract_text(...).trim()."""
-    return java_trim(extract_text(html_utf8, cleaner))
-
-
 def abbreviated_plaintext(cleaned_plaintext: str) -> str:
     """``plain-abbrv`` extra-info: abbreviate(text,50) + collapse ASCII ws."""
     return _JAVA_MULTI_SPACE.sub(" ", abbreviate(cleaned_plaintext, 50))

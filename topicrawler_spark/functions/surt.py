@@ -9,7 +9,7 @@ against the broadcast prefix list.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -59,33 +59,7 @@ def in_surt_scope(url: Column, prefixes: list[str]) -> Column:
     return cond
 
 
-def scope_filter(df: DataFrame, url_col: str, seed_urls: list[str]) -> DataFrame:
-    """seeds-as-SURT-prefixes accept rule."""
-    prefixes = sorted({surt_prefix_from_url(u) for u in seed_urls})
-    return df.filter(in_surt_scope(F.col(url_col), prefixes))
-
-
 # the reference scope's hygiene predicates (cxml pathological-path and
 # too-many-path-segments rules)
 PATHOLOGICAL_PATH = r"^.*?/(?:[^/]+/)*([^/]+)/(?:\1/){2,}.*$"  # repeated segment 3+
 TOO_MANY_SEGMENTS = r"^[^?]*(?:/[^/?]+){20,}.*$"
-
-
-def hygiene_filter(df: DataFrame, url_col: str) -> DataFrame:
-    c = F.col(url_col)
-    return df.filter(~c.rlike(PATHOLOGICAL_PATH) & ~c.rlike(TOO_MANY_SEGMENTS))
-
-
-def too_many_domains_filter(
-    df: DataFrame, sld_col: str, max_domains: int = 20
-) -> DataFrame:
-    """Declarative TooManyDomainsDecideRule: keep only candidates whose
-    2nd-level domain is among the first ``max_domains`` observed (by first
-    appearance order when an order column exists, else lexicographic)."""
-    allowed = (
-        df.select(sld_col)
-        .distinct()
-        .orderBy(sld_col)
-        .limit(max_domains)
-    )
-    return df.join(F.broadcast(allowed), sld_col, "left_semi")

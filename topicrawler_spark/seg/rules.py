@@ -268,17 +268,12 @@ def convert_escapes(line: str) -> str:
 
 
 _DEFAULT_RULESET: RuleSet | None = None
-_RULESETS: dict[str, RuleSet] = {}
 
 
 def get_ruleset(name: str = "default") -> RuleSet:
+    """The rule set for language ``name``: only the default rules ship, so
+    every name resolves to them."""
     global _DEFAULT_RULESET
-    if name in _RULESETS:
-        return _RULESETS[name]
     if _DEFAULT_RULESET is None:
         _DEFAULT_RULESET = RuleSet()
     return _DEFAULT_RULESET
-
-
-def register_ruleset(rs: RuleSet) -> None:
-    _RULESETS[rs.name] = rs
